@@ -51,14 +51,22 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_2_10_0_src_mapreduce_spark.sources.readers import local_values_df
+from hadoop_2_10_0_src_mapreduce_spark.sources.readers import read_metadata
+from hadoop_2_10_0_src_mapreduce_spark.sources.writers import write_metadata
 
 from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
+    _centroid_table,
+    _conf_table,
+    _f64_lists,
+    _f64_rows,
     _global_topk,
     _md5_key,
+    _meta_table,
     _pin,
     _score_pairs_arrow,
     _seq_matdot,
@@ -604,7 +612,6 @@ def save_ivfpq_index(
         n_iters=n_iters, max_train=max_train,
         centers=cents if residual else None,
     )
-    spark = emb.sparkSession
     # conf records the REQUESTED n_codes, not the trained count: a
     # corpus smaller than n_codes trains a sample-limited codebook
     # (books.shape[1] < n_codes), and recording that actual count
@@ -613,32 +620,27 @@ def save_ivfpq_index(
     # count is kept alongside for audits (index_stats / debugging);
     # readers that need the real codebook shape read the codebooks
     # table itself (_load_pq_codebooks).
-    # local_values_df (pure-JVM VALUES), not createDataFrame(list):
-    # the pickled-RDD form pays ~cores near-empty Python-worker round
-    # trips per metadata write (guide §4; the join_asof measurement)
-    local_values_df(
-        spark,
-        [(
-            int(books.shape[0]), int(n_codes), int(books.shape[1]),
-            bool(residual),
-        )],
-        "n_subspaces int, n_codes int, n_codes_trained int, "
-        "residual boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/conf")
-    local_values_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    local_values_df(
-        spark,
-        [
-            (s, c, [float(x) for x in books[s, c]])
-            for s in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "subspace int, code int, codeword array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    m, k_trained, dsub = books.shape
+    write_metadata(
+        f"{path}/conf",
+        _conf_table(
+            n_subspaces=m, n_codes=n_codes, n_codes_trained=k_trained,
+            residual=bool(residual),
+        ),
+    )
+    write_metadata(f"{path}/centroids", _centroid_table(cents))
+    write_metadata(
+        f"{path}/codebooks",
+        _meta_table({
+            "subspace": pa.array(
+                np.repeat(np.arange(m, dtype=np.int32), k_trained)
+            ),
+            "code": pa.array(
+                np.tile(np.arange(k_trained, dtype=np.int32), m)
+            ),
+            "codeword": _f64_lists(books.reshape(m * k_trained, dsub)),
+        }),
+    )
     home = (
         ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
         .where(F.col("probe_rank") == 0)
@@ -657,7 +659,7 @@ def save_ivfpq_index(
     _write_ivf_lists(codes, path, list_dirs, mode="overwrite")
 
 
-def _ivfpq_conf(spark, path: str) -> dict:
+def _ivfpq_conf(path: str) -> dict:
     """The stored build conf. A missing ``conf`` dir falls back to the
     ``conf.__old__`` copy a crash inside a pre-r7 rebuild's sequential
     swap could leave behind (mirroring ``_ivf_list_dirs``'s
@@ -670,24 +672,17 @@ def _ivfpq_conf(spark, path: str) -> dict:
 
     for name in ("conf", "conf.__old__"):
         if (pathlib.Path(path) / name).exists():
-            r = spark.read.parquet(_pin(f"{path}/{name}")).collect()[0]
-            return r.asDict()
+            return read_metadata(_pin(f"{path}/{name}")).to_pylist()[0]
     return {"residual": False}
 
 
-def _load_pq_codebooks(spark, path: str) -> np.ndarray:
-    rows = (
-        spark.read.parquet(_pin(f"{path}/codebooks"))
-        .orderBy("subspace", "code")
-        .collect()
+def _load_pq_codebooks(path: str) -> np.ndarray:
+    t = read_metadata(_pin(f"{path}/codebooks")).sort_by(
+        [("subspace", "ascending"), ("code", "ascending")]
     )
-    m = max(r.subspace for r in rows) + 1
-    k = max(r.code for r in rows) + 1
-    dsub = len(rows[0].codeword)
-    books = np.empty((m, k, dsub))
-    for r in rows:
-        books[r.subspace, r.code] = np.asarray(r.codeword, dtype=np.float64)
-    return books
+    m = pc.max(t.column("subspace")).as_py() + 1
+    k = pc.max(t.column("code")).as_py() + 1
+    return _f64_rows(t.column("codeword")).reshape(m, k, -1)
 
 
 def query_ivfpq_index(
@@ -733,9 +728,9 @@ def query_ivfpq_index(
     )
 
     spark = queries.sparkSession
-    cents = _load_ivf_centroids(spark, path)
-    books = _load_pq_codebooks(spark, path)
-    residual = _ivfpq_conf(spark, path)["residual"]
+    cents = _load_ivf_centroids(path)
+    books = _load_pq_codebooks(path)
+    residual = _ivfpq_conf(path)["residual"]
     from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
         _resolve_probes,
     )
@@ -800,8 +795,8 @@ def append_to_ivfpq_index(
     )
 
     spark = new_emb.sparkSession
-    cents = _load_ivf_centroids(spark, path)
-    books = _load_pq_codebooks(spark, path)
+    cents = _load_ivf_centroids(path)
+    books = _load_pq_codebooks(path)
     home = (
         ivf_assign(
             new_emb.select(id_col, vec_col), cents, vec_col=vec_col,
@@ -812,7 +807,7 @@ def append_to_ivfpq_index(
     )
     stored_schema = spark.read.parquet(_pin(f"{path}/lists")).schema
     stored_packed = stored_schema["pq_codes"].dataType.simpleString() == "binary"
-    residual = _ivfpq_conf(spark, path)["residual"]
+    residual = _ivfpq_conf(path)["residual"]
     from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
         _ivf_list_dirs,
         _write_ivf_lists,
@@ -890,7 +885,7 @@ def rebuild_ivfpq_index(
     shutil.rmtree(old, ignore_errors=True)
     shutil.rmtree(tmp, ignore_errors=True)
 
-    conf = _ivfpq_conf(spark, path)
+    conf = _ivfpq_conf(path)
     list_dirs = _ivf_list_dirs(path)
     live = source_df.select(id_col, vec_col)
     tomb = _tombstone_df(spark, path)

@@ -45,6 +45,16 @@ caller needs:
   scoring, in exchange for bit-exact oracle verifiability of the
   whole query.
 
+Index store (the ``save_/query_/append_to_/compact_/rebuild_*_index``
+functions here and their IVF-PQ twins in ``pq.py``): an index is a
+directory of parquet subdirectories. BOUNDED metadata — conf,
+centroids, PQ codebooks and list-of-ids tombstone batches — is read
+and written on the driver with Arrow (``sources.readers.read_metadata``
+/ ``sources.writers.write_metadata``) and runs no Spark job;
+corpus-scale data — lists, buckets, DataFrame deletes and every scan
+over them — goes through Spark. Paths are local/NFS only: swaps and
+metadata files rely on POSIX renames.
+
 Caching contract: the ANN paths ``persist()`` their multiply-read
 intermediates (capped bucket memberships, probe assignments) and do
 NOT unpersist them — the returned DataFrame is lazy and still reads
@@ -60,11 +70,17 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from hadoop_2_10_0_src_mapreduce_spark.sources.readers import local_values_df
+from hadoop_2_10_0_src_mapreduce_spark.sources.readers import (
+    footer_schema,
+    local_values_df,
+    read_metadata,
+)
+from hadoop_2_10_0_src_mapreduce_spark.sources.writers import write_metadata
 
 
 def _pin(path: str) -> str:
@@ -1923,16 +1939,7 @@ def save_ivf_index(
         n_iters=n_iters,
         max_train=max_train,
     )
-    spark = emb.sparkSession
-    # local_values_df, not createDataFrame(list): the pickled-RDD form
-    # pays ~cores near-empty Python-worker round trips per save (guide
-    # §4; the join_asof measurement) — the VALUES relation is pure JVM
-    cent_df = local_values_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    write_metadata(f"{path}/centroids", _centroid_table(cents))
     home = (
         ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
         .where(F.col("probe_rank") == 0)
@@ -1978,12 +1985,7 @@ def query_ivf_index(
     ``spark.catalog.clearCache()`` between batches it is done with."""
     spark = queries.sparkSession
     pins = _pin_index(path, ("centroids", "lists"))
-    cent_rows = (
-        spark.read.parquet(pins["centroids"]).orderBy("list_id").collect()
-    )
-    cents = np.stack(
-        [np.asarray(r.centroid, dtype=np.float64) for r in cent_rows]
-    )
+    cents = _centroid_matrix(read_metadata(pins["centroids"]))
     n_probe = _resolve_probes(len(cents), n_probe)
     fan = ivf_assign(
         queries.select(id_col, vec_col),
@@ -2090,13 +2092,13 @@ def save_lsh_index(
     serving and appends replay them exactly."""
     n_planes = _resolve_planes(emb, n_planes)
     n_tables = _resolve_tables(n_planes, n_tables)
-    spark = emb.sparkSession
-    local_values_df(
-        spark,
-        [(n_planes, n_tables, dim, max_bucket, bool(bucket_dirs))],
-        "n_planes int, n_tables int, dim int, max_bucket int, "
-        "bucket_dirs boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/conf")
+    write_metadata(
+        f"{path}/conf",
+        _conf_table(
+            n_planes=n_planes, n_tables=n_tables, dim=dim,
+            max_bucket=max_bucket, bucket_dirs=bool(bucket_dirs),
+        ),
+    )
     capped = capped_lsh_buckets(
         emb,
         id_col=id_col,
@@ -2187,7 +2189,7 @@ def query_lsh_index(
     between batches it is done with."""
     spark = queries.sparkSession
     pins = _pin_index(path, ("conf", "buckets"))
-    conf = spark.read.parquet(pins["conf"]).collect()[0]
+    conf = _read_conf(pins["conf"])
     planes = md5_planes(conf.n_tables, conf.n_planes, conf.dim)
     if n_multiprobe == "auto":
         n_multiprobe = adaptive_multiprobe(conf.n_planes, conf.n_tables)
@@ -2286,13 +2288,61 @@ def query_lsh_index(
 # existing index WITHOUT retraining or rewriting it, tombstone deletes
 # so queries stop returning removed ids immediately, and compact to
 # physically drop tombstoned rows (and, for LSH, re-apply the global
-# bucket cap) off the ingest path. All paths are local/NFS table dirs,
-# the same documented scope as sources.writers.compact_table.
+# bucket cap) off the ingest path.
 
 
-def _load_ivf_centroids(spark: SparkSession, path: str) -> np.ndarray:
-    rows = spark.read.parquet(_pin(f"{path}/centroids")).orderBy("list_id").collect()
-    return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in rows])
+def _meta_table(cols: dict[str, pa.Array]) -> pa.Table:
+    """Metadata columns as a table with NON-NULL top-level fields —
+    the parquet schema the index's metadata files have always had."""
+    return pa.Table.from_arrays(
+        list(cols.values()),
+        schema=pa.schema(
+            [pa.field(n, a.type, nullable=False) for n, a in cols.items()]
+        ),
+    )
+
+
+def _conf_table(**conf) -> pa.Table:
+    """One conf row: flags are ``boolean``, every other value ``int``."""
+    return _meta_table({
+        k: pa.array([v], pa.bool_() if isinstance(v, bool) else pa.int32())
+        for k, v in conf.items()
+    })
+
+
+def _read_conf(conf_dir: str) -> Row:
+    """The single conf row of a (pinned) conf directory."""
+    return Row(**read_metadata(conf_dir).to_pylist()[0])
+
+
+def _f64_lists(mat: np.ndarray) -> pa.Array:
+    """The rows of a 2-D matrix as an ``array<double>`` column, bits
+    unchanged."""
+    mat = np.ascontiguousarray(mat, dtype=np.float64)
+    n, d = mat.shape
+    offsets = pa.array(np.arange(0, n * d + 1, d, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.reshape(-1)))
+
+
+def _f64_rows(col: pa.ChunkedArray) -> np.ndarray:
+    """An ``array<double>`` column of equal-length rows as a matrix."""
+    flat = col.combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(len(col), -1)
+
+
+def _centroid_table(cents: np.ndarray) -> pa.Table:
+    return _meta_table({
+        "list_id": pa.array(np.arange(len(cents), dtype=np.int32)),
+        "centroid": _f64_lists(cents),
+    })
+
+
+def _centroid_matrix(table: pa.Table) -> np.ndarray:
+    return _f64_rows(table.sort_by("list_id").column("centroid"))
+
+
+def _load_ivf_centroids(path: str) -> np.ndarray:
+    return _centroid_matrix(read_metadata(_pin(f"{path}/centroids")))
 
 
 def _index_id_col(df: DataFrame, layout_cols: tuple[str, ...]) -> str:
@@ -2324,13 +2374,18 @@ def _index_vec_col(df: DataFrame, layout_cols: tuple[str, ...]) -> str:
 
 
 def _tombstone_df(spark: SparkSession, path: str):
-    """The tombstoned-id frame, or None when no deletes exist."""
-    import pathlib
+    """The tombstoned-id frame, or None when no deletes exist. The scan
+    takes its schema from a file footer, so it runs no inference job."""
+    import os
 
-    tomb = pathlib.Path(path) / "tombstones"
-    if not tomb.exists():
+    tomb = f"{path}/tombstones"
+    if not os.path.exists(tomb):
         return None
-    return spark.read.parquet(_pin(str(tomb))).select("id").distinct()
+    tomb = _pin(tomb)
+    schema = footer_schema(tomb)
+    if schema is None:
+        return None
+    return spark.read.schema(schema).parquet(tomb).select("id").distinct()
 
 
 def _apply_tombstones(stored: DataFrame, path: str, id_col: str) -> DataFrame:
@@ -2379,7 +2434,7 @@ def append_to_ivf_index(
     ``delete_from_index`` the id first, then append; the tombstone
     hides the old copy immediately and compaction removes it."""
     spark = new_emb.sparkSession
-    cents = _load_ivf_centroids(spark, path)
+    cents = _load_ivf_centroids(path)
     home = (
         ivf_assign(
             new_emb.select(id_col, vec_col), cents, vec_col=vec_col,
@@ -2432,7 +2487,7 @@ def append_to_lsh_index(
     dedupe by id at query time) but storage grows; for updates,
     tombstone the id first, then append."""
     spark = new_emb.sparkSession
-    conf = spark.read.parquet(_pin(f"{path}/conf")).collect()[0]
+    conf = _read_conf(_pin(f"{path}/conf"))
     capped = capped_lsh_buckets(
         new_emb,
         id_col=id_col,
@@ -2475,22 +2530,24 @@ def delete_from_index(
     at ``compact_ivf_index`` / ``compact_lsh_index``.
 
     ``ids`` is a DataFrame carrying ``id_col`` (corpus-scale deletes
-    stay distributed) or a plain Python iterable for the small case.
+    stay distributed) or a plain Python iterable for the small case,
+    which the driver appends as one file without a Spark job (int ids
+    are stored as ``bigint``, anything else as ``string``).
     Tombstones accumulate as (id) parquet appends — ids only, bounded
     by the delete volume, and the serving anti-join is a broadcast-
     sized build side until deletes grow corpus-scale, at which point
     compaction is overdue anyway."""
+    tomb = f"{path}/tombstones"
     if isinstance(ids, DataFrame):
-        df = ids.select(F.col(id_col).alias("id")).distinct()
-    else:
-        rows = [(i,) for i in ids]
-        if not rows:  # empty delete: no tombstone file, no-op
-            return
-        # same inference createDataFrame applied (int → bigint), via a
-        # pure-JVM VALUES relation instead of a pickled python RDD
-        id_t = "bigint" if isinstance(rows[0][0], int) else "string"
-        df = local_values_df(spark, rows, f"id {id_t}")
-    df.write.mode("append").parquet(f"{path}/tombstones")
+        ids.select(F.col(id_col).alias("id")).distinct().write.mode(
+            "append"
+        ).parquet(tomb)
+        return
+    ids = list(ids)
+    if not ids:  # empty delete: no tombstone file, no-op
+        return
+    id_t = pa.int64() if isinstance(ids[0], int) else pa.string()
+    write_metadata(tomb, _meta_table({"id": pa.array(ids, id_t)}), append=True)
 
 
 def _swap_rewrite(
@@ -2556,7 +2613,7 @@ def compact_lsh_index(spark: SparkSession, path: str) -> None:
     import pathlib
     import shutil
 
-    conf = spark.read.parquet(_pin(f"{path}/conf")).collect()[0]
+    conf = _read_conf(_pin(f"{path}/conf"))
     live = f"{path}/buckets"
     df = spark.read.parquet(_pin(live))
     id_col = _index_id_col(df, ("table_idx", "bucket", "qvec", "scale"))
@@ -2722,7 +2779,7 @@ def index_stats(
         )
     advisor = None
     if family == "lsh":
-        conf = spark.read.parquet(pins["conf"]).collect()[0]
+        conf = _read_conf(pins["conf"])
         advisor = multiprobe_advisor(
             int(conf.n_planes), int(conf.n_tables),
             recall_target=recall_target,
@@ -2856,16 +2913,10 @@ def rebuild_ivf_index(
     a corpus that outgrew its build-time cell count gets proportional
     cells back, restoring bounded occupancy (``index_stats`` flags
     this as its occupancy recommendation)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        atomic_swap_write,
-    )
-
     stored = spark.read.parquet(_pin(f"{path}/lists"))
     was_q = "qvec" in stored.columns
     if n_centroids is None:
-        n_centroids = (
-            spark.read.parquet(_pin(f"{path}/centroids")).count()
-        )
+        n_centroids = read_metadata(_pin(f"{path}/centroids")).num_rows
     if corpus is None:
         # preserve the STORED id column name: renaming it to the
         # id_col default would fork the index schema for any index
@@ -2914,12 +2965,7 @@ def rebuild_ivf_index(
             home.repartition("list_id"), f"{path}/lists", [],
             sort_cols=["list_id"],
         )
-    cent_df = local_values_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    ).coalesce(1)
-    atomic_swap_write(cent_df, f"{path}/centroids", [])
+    write_metadata(f"{path}/centroids", _centroid_table(cents))
     import pathlib
     import shutil
 
@@ -2968,11 +3014,7 @@ def rebuild_lsh_index(
     bucket rows always carry the full live vector set regardless of
     how they are bucketed. The tombstone dir is dropped at the end
     (the rebuild is also a compaction)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        atomic_swap_write,
-    )
-
-    conf = spark.read.parquet(_pin(f"{path}/conf")).collect()[0]
+    conf = _read_conf(_pin(f"{path}/conf"))
     n_planes = conf.n_planes if n_planes is None else n_planes
     n_tables = conf.n_tables if n_tables is None else n_tables
     max_bucket = conf.max_bucket if max_bucket is None else max_bucket
@@ -3026,13 +3068,13 @@ def rebuild_lsh_index(
             new_stored, f"{path}/buckets", ["table_idx"],
             sort_cols=["table_idx", "bucket"],
         )
-    conf_df = local_values_df(
-        spark,
-        [(n_planes, n_tables, conf.dim, max_bucket, bucket_dirs)],
-        "n_planes int, n_tables int, dim int, max_bucket int, "
-        "bucket_dirs boolean",
-    ).coalesce(1)
-    atomic_swap_write(conf_df, f"{path}/conf", [])
+    write_metadata(
+        f"{path}/conf",
+        _conf_table(
+            n_planes=n_planes, n_tables=n_tables, dim=conf.dim,
+            max_bucket=max_bucket, bucket_dirs=bucket_dirs,
+        ),
+    )
     corpus.unpersist()
     import pathlib
     import shutil

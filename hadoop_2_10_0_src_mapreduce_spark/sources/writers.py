@@ -523,13 +523,17 @@ def compact_table(
     pass every append-heavy table needs (streaming foreachBatch sinks
     and the incremental dedup index append one file set per
     micro-batch; a year of that is millions of kilobyte files whose
-    OPEN cost dwarfs their scan cost). Rewrites the table into
-    ~``target_file_bytes`` files (count derived from the table's
-    on-disk footprint), preserving ``partition_cols`` layout, then
+    OPEN cost dwarfs their scan cost). Rewrites the table into files
+    of ~``target_file_bytes`` UNCOMPRESSED bytes, at least one per
+    partition directory — the count comes from row counts times the
+    Arrow width of a sample row, so it does not depend on how
+    fragmented the input is (on-disk bytes do: every small file
+    repeats its own dictionaries and footer) — preserving
+    ``partition_cols`` layout, then
     atomically swaps directories (write to `<path>.__compact__`,
     rename old → `.__old__`, new → path, delete old) — readers either
     see the old file set or the new one, never a mix. Returns the
-    output file count per partition.
+    planned output file count (the rewrite's task count).
 
     ``cluster_by`` SORT-CLUSTERS the rewrite: rows range-partition and
     sort on those columns, so every output file (and row group) covers
@@ -563,11 +567,13 @@ def compact_table(
             "optimal layout is the plain sort — drop zorder)"
         )
     df = spark.read.parquet(path)
-    size = sum(
-        f.stat().st_size
-        for f in __import__("pathlib").Path(path).rglob("*.parquet")
-    )
-    n_files = max(1, -(-size // target_file_bytes))
+    # one row per partition directory (one row when unpartitioned):
+    # every directory gets at least one file of its own
+    width = _sample_row_bytes(path)
+    n_files = sum(
+        max(1, int(-(-r["count"] * width // target_file_bytes)))
+        for r in df.groupBy(*partition_cols).count().collect()
+    ) or 1
     if zorder:
         mm = df.agg(
             *[F.min(c).alias(f"_mn_{c}") for c in cluster_by],
@@ -598,6 +604,23 @@ def compact_table(
         writer = df.repartition(n_files)
     atomic_swap_write(writer, path, partition_cols)
     return n_files
+
+
+def _sample_row_bytes(path: str, n: int = 4096) -> float:
+    """Arrow in-memory bytes per row over the first ``n`` rows of one
+    data file of a parquet table — partition columns live in directory
+    names, not in the files, so they are not counted."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    for f in sorted(pathlib.Path(path).rglob("*.parquet")):
+        if f.name.startswith((".", "_")):
+            continue
+        for batch in pq.ParquetFile(str(f)).iter_batches(batch_size=n):
+            if batch.num_rows:
+                return batch.nbytes / batch.num_rows
+    return 1.0
 
 
 def atomic_swap_write(
@@ -654,12 +677,32 @@ def atomic_swap_write(
     the swapped-in directory would be unreadable (no schema) and the
     table bricked — an empty rewrite means the caller is deleting the
     table, which deserves an explicit rm, not a compaction."""
+    def write(dst: str) -> None:
+        if not df.take(1):
+            raise ValueError(
+                f"atomic_swap_write: rewrite of {path} would be EMPTY "
+                "(everything deleted/tombstoned); remove the directory "
+                "explicitly instead of compacting it away"
+            )
+        w = df.write.mode("overwrite")
+        if partition_cols:
+            w = w.partitionBy(*partition_cols)
+        w.parquet(dst)
+
+    _swap_in(path, write)
+
+
+def _swap_in(path: str, write) -> None:
+    """The directory swap behind ``atomic_swap_write``: ``write(dst)``
+    fills a fresh directory, which then replaces `path` (pointer flip
+    in pointer mode, two renames otherwise) with the crash healing
+    described there."""
     import os
     import pathlib
     import shutil
 
     if os.path.islink(path):
-        _pointer_swap_write(df, path, partition_cols)
+        _pointer_swap_write(path, write)
         return
 
     tmp, old = f"{path}.__compact__", f"{path}.__old__"
@@ -675,16 +718,7 @@ def atomic_swap_write(
             shutil.rmtree(old)
         else:
             shutil.move(old, path)  # compact result lost; restore prior live
-    if not df.take(1):
-        raise ValueError(
-            f"atomic_swap_write: rewrite of {path} would be EMPTY "
-            "(everything deleted/tombstoned); remove the directory "
-            "explicitly instead of compacting it away"
-        )
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(tmp)
+    write(tmp)
     shutil.move(path, old)
     shutil.move(tmp, path)
     shutil.rmtree(old)
@@ -754,6 +788,43 @@ def pin_generations(
         second = {n: pin_generation(f"{path}/{n}") for n in names}
         if first == second:
             return first
+
+
+def write_metadata(path: str, table, *, append: bool = False) -> None:
+    """Write a BOUNDED pyarrow table (an index's conf, centroids,
+    codebooks, a tombstone batch) as one parquet file of the directory
+    `path`, from the driver — no Spark job. The file looks like a
+    Spark-written one (``part-*.snappy.parquet`` beside a ``_SUCCESS``;
+    column types as the table declares them), so Spark, DuckDB and
+    ``sources.readers.read_metadata`` all read it. It is written under
+    a dot-prefixed name, which every parquet reader skips, and renamed
+    into place, so no reader sees a partial file.
+
+    ``append`` adds the file beside the existing ones (tombstones);
+    otherwise the table replaces the directory — through the same swap
+    as ``atomic_swap_write`` (pointer mode included) when it exists.
+    Local/NFS paths only, like every swap in this module."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    def write(dst: str) -> None:
+        os.makedirs(dst, exist_ok=True)
+        name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+        tmp = os.path.join(dst, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp, compression="snappy")
+            os.replace(tmp, os.path.join(dst, name))
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+        open(os.path.join(dst, "_SUCCESS"), "w").close()
+
+    if append or not os.path.lexists(path):
+        write(path)
+    else:
+        _swap_in(path, write)
 
 
 def _mark_served(gen_path: str) -> None:
@@ -893,9 +964,7 @@ def rollback_pointer_swap(path: str) -> str:
     return prev
 
 
-def _pointer_swap_write(
-    df: "DataFrame", path: str, partition_cols: tuple[str, ...] | list[str]
-) -> None:
+def _pointer_swap_write(path: str, write) -> None:
     """The blink-free swap for pointer-mode directories: write the new
     generation beside the current one, atomically rename a fresh
     symlink over `path`, then delete every generation EXCEPT the one
@@ -923,16 +992,7 @@ def _pointer_swap_write(
         )
     nxt = int(gens[-1].rsplit(".__gen_", 1)[1].rstrip("_")) + 1
     gen = f"{path}.__gen_{nxt}__"
-    if not df.take(1):
-        raise ValueError(
-            f"atomic_swap_write: rewrite of {path} would be EMPTY "
-            "(everything deleted/tombstoned); remove the directory "
-            "explicitly instead of compacting it away"
-        )
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(gen)
+    write(gen)
     tmp_link = f"{path}.__ptr_tmp__"
     if os.path.lexists(tmp_link):
         os.unlink(tmp_link)

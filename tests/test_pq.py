@@ -173,7 +173,7 @@ def test_ivfpq_save_query_probe_all_equals_flat_adc(spark, emb, books, tmp_path)
     queries = emb.where(F.col("vec_id") < 10)
     served = pq.query_ivfpq_index(queries, path, k=10, n_probe=8)
 
-    stored_books = pq._load_pq_codebooks(spark, path)
+    stored_books = pq._load_pq_codebooks(path)
     codes = spark.read.parquet(f"{path}/lists").select("vec_id", "pq_codes")
     flat = pq.pq_topk(codes, queries, stored_books, k=10)
     as_rows = lambda df: sorted(
@@ -327,12 +327,12 @@ def test_residual_reconstruction_beats_plain_on_clusters(spark, clustered, tmp_p
             clustered, path, n_centroids=5, n_subspaces=8, n_codes=8,
             residual=residual,
         )
-        cents = _load_ivf_centroids(spark, path)
-        books = pq._load_pq_codebooks(spark, path)
+        cents = _load_ivf_centroids(path)
+        books = pq._load_pq_codebooks(path)
         # decode through the API: residual stores pass centers= (the
         # conf records which — pq_decode without them would return
         # near-zero residuals, the documented audit footgun)
-        assert pq._ivfpq_conf(spark, path)["residual"] is residual
+        assert pq._ivfpq_conf(path)["residual"] is residual
         rec_rows = pq.pq_decode(
             spark.read.parquet(f"{path}/lists"), books,
             centers=cents if residual else None,
@@ -410,7 +410,7 @@ def test_residual_append_equals_fresh_and_conf_backcompat(spark, clustered, tmp_
     pq.save_ivfpq_index(clustered, legacy, n_centroids=5, n_subspaces=8,
                         n_codes=16)
     shutil.rmtree(f"{legacy}/conf")
-    assert pq._ivfpq_conf(spark, legacy) == {"residual": False}
+    assert pq._ivfpq_conf(legacy) == {"residual": False}
     queries = clustered.where(F.col("vec_id") < 5)
     assert pq.query_ivfpq_index(queries, legacy, k=3, n_probe=5).count() > 0
 
@@ -466,7 +466,7 @@ def test_rebuild_ivfpq_preserves_conf_and_compacts(spark, clustered, tmp_path):
     similarity.delete_from_index(spark, path, [0, 1, 2])
     pq.rebuild_ivfpq_index(spark, path, clustered, n_centroids=5)
 
-    conf = pq._ivfpq_conf(spark, path)
+    conf = pq._ivfpq_conf(path)
     assert conf["residual"] is True and conf["n_codes"] == 16
 
     import pathlib
@@ -563,7 +563,7 @@ def test_rebuild_heals_crash_inside_swap_window(spark, clustered, tmp_path):
     assert not pathlib.Path(f"{path}/lists").exists()
     pq.rebuild_ivfpq_index(spark, path, clustered, n_centroids=5)
     assert pathlib.Path(f"{path}/lists").exists()
-    assert pq._ivfpq_conf(spark, path)["residual"] is True
+    assert pq._ivfpq_conf(path)["residual"] is True
     queries = clustered.where(F.col("vec_id") < 5)
     assert pq.query_ivfpq_index(queries, path, k=3, n_probe=5).count() > 0
 

@@ -566,7 +566,7 @@ def test_no_library_composition_plans_a_scale_killer(spark, tmp_path):
         "cut_spans": dedup.cut_repeated_spans(docs, "text", "doc_id", k=3),
         "ivf_append_filing": similarity.ivf_assign(
             emb.select("vec_id", "embedding"),
-            similarity._load_ivf_centroids(spark, path),
+            similarity._load_ivf_centroids(path),
             n_probe=1, keep_vec=True,
         ),
         "chunking": chunk_documents(docs, max_tokens=4, overlap=1),
