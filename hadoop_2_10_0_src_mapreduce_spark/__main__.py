@@ -110,7 +110,9 @@ def main(argv: list[str] | None = None) -> int:
         choices=("build", "query", "append", "delete", "compact", "stats",
                  "rebuild", "maintain", "pointer", "rollback"),
     )
-    ix.add_argument("--family", choices=("ivf", "lsh", "ivfpq"), default="ivf")
+    ix.add_argument("--family", choices=("ivf", "lsh", "ivfpq"), default="ivf",
+                    help="build: the index family (every other action "
+                    "detects it from the index)")
     ix.add_argument("--path", required=True, help="index directory")
     ix.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ix.add_argument("--quantize", action="store_true",
@@ -121,13 +123,13 @@ def main(argv: list[str] | None = None) -> int:
                     "clustered corpora)")
     ix.add_argument("--k", type=int, default=5)
     ix.add_argument("--n-probe", type=_int_or_auto, default="auto",
-                    help="query --family ivf/ivfpq: lists to probe; "
+                    help="query (ivf, ivfpq): lists to probe; "
                     "'auto' (default) scales with the stored list count "
                     "(ceil(lists/16), floor 4)")
     ix.add_argument("--n-queries", type=int, default=10,
                     help="query: serve the first N embedding rows")
     ix.add_argument("--n-multiprobe", type=_int_or_auto, default="auto",
-                    help="query --family lsh: multi-probe bit flips per "
+                    help="query (lsh): multi-probe bit flips per "
                     "(query, table) — probes the 2^q lowest-|margin| "
                     "perturbed buckets; 'auto' (default) covers the bit "
                     "deficit the table rule left (0 at auto-built "
@@ -136,17 +138,17 @@ def main(argv: list[str] | None = None) -> int:
                     "embedding rows to fold in (e.g. 'vec_id >= 500')")
     ix.add_argument("--ids", help="delete: comma-separated vec_ids to tombstone")
     ix.add_argument("--n-tables", type=_int_or_auto,
-                    help="rebuild --family lsh: new table count, or 'auto' "
+                    help="rebuild (lsh): new table count, or 'auto' "
                     "to re-size to the live corpus (16 doubled per bit "
                     "past the 10-bit geometry; omit to keep the stored "
                     "conf)")
     ix.add_argument("--n-planes", type=_int_or_auto,
-                    help="rebuild --family lsh: new planes per table, or "
+                    help="rebuild (lsh): new planes per table, or "
                     "'auto' to re-size to the live corpus")
     ix.add_argument("--n-centroids", type=_int_or_auto,
-                    help="rebuild --family ivf: new list count, or 'auto' "
+                    help="rebuild (ivf, ivfpq): new list count, or 'auto' "
                     "to re-size to the live corpus")
-    ix.add_argument("--max-bucket", type=int, help="rebuild --family lsh: new "
+    ix.add_argument("--max-bucket", type=int, help="rebuild (lsh): new "
                     "global bucket cap")
     ix.add_argument("--recall-target", type=float,
                     help="stats/maintain: turn a deficit LSH store's "
@@ -349,33 +351,25 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "index":
+        # every action but build detects the family from the index
+        from hadoop_2_10_0_src_mapreduce_spark.operators.index_store import (
+            index_codec,
+        )
+
+        codec = None if args.action == "build" else index_codec(args.path)
         if args.action in ("pointer", "rollback"):
             # one-time conversion to blink-free (symlink-generation)
             # swaps on the row store, so compact/maintain can run while
             # the index serves (one final ENOENT blink happens NOW,
             # before serving starts — see enable_pointer_swaps).
             # Pure-filesystem action: no Spark session, no fixture
-            # tables; the row-store subdir is detected from the index
-            # itself (exactly one of lists/buckets exists per family)
-            import os
-
+            # tables
             from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
                 enable_pointer_swaps,
                 rollback_pointer_swap,
             )
 
-            subs = [
-                s for s in ("lists", "buckets")
-                if os.path.isdir(f"{args.path}/{s}")
-                or os.path.islink(f"{args.path}/{s}")
-            ]
-            if len(subs) != 1:
-                raise SystemExit(
-                    f"{args.path} holds {subs or 'no row store'} — "
-                    "expected exactly one of lists/ (ivf, ivfpq) or "
-                    "buckets/ (lsh)"
-                )
-            store = f"{args.path}/{subs[0]}"
+            store = f"{args.path}/{codec.rows}"
             if args.action == "pointer":
                 enable_pointer_swaps(store)
                 print(f"pointer swaps enabled on {store}")
@@ -386,6 +380,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
+        from hadoop_2_10_0_src_mapreduce_spark.operators import pq as pqmod
         from hadoop_2_10_0_src_mapreduce_spark.operators import similarity
         from hadoop_2_10_0_src_mapreduce_spark.session import get_spark
         from hadoop_2_10_0_src_mapreduce_spark.sources.readers import load_table
@@ -395,25 +390,20 @@ def main(argv: list[str] | None = None) -> int:
         emb = load_table(spark, args.sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        from hadoop_2_10_0_src_mapreduce_spark.operators import pq as pqmod
+        family = args.family if codec is None else codec.family
 
         if args.action == "build":
-            if args.family == "ivf":
+            if family == "ivf":
                 similarity.save_ivf_index(emb, args.path, quantize=args.quantize)
-            elif args.family == "ivfpq":
+            elif family == "ivfpq":
                 pqmod.save_ivfpq_index(emb, args.path, residual=args.residual)
             else:
                 similarity.save_lsh_index(emb, args.path, quantize=args.quantize)
-            print(f"built {args.family} index at {args.path}")
+            print(f"built {family} index at {args.path}")
         elif args.action == "append":
             batch = emb.where(args.where) if args.where else emb
-            if args.family == "ivf":
-                similarity.append_to_ivf_index(batch, args.path)
-            elif args.family == "ivfpq":
-                pqmod.append_to_ivfpq_index(batch, args.path)
-            else:
-                similarity.append_to_lsh_index(batch, args.path)
-            print(f"appended to {args.family} index at {args.path}")
+            similarity.append_to_index(batch, args.path)
+            print(f"appended to {family} index at {args.path}")
         elif args.action == "delete":
             if not args.ids:
                 raise SystemExit("delete requires --ids")
@@ -422,11 +412,8 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(f"tombstoned {args.ids} in {args.path}")
         elif args.action == "compact":
-            if args.family in ("ivf", "ivfpq"):
-                similarity.compact_ivf_index(spark, args.path)
-            else:
-                similarity.compact_lsh_index(spark, args.path)
-            print(f"compacted {args.family} index at {args.path}")
+            similarity.compact_index(spark, args.path)
+            print(f"compacted {family} index at {args.path}")
         elif args.action == "stats":
             import json as _json
 
@@ -440,42 +427,34 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.path, recall_target=args.recall_target
             )))
         elif args.action == "rebuild":
-            if args.family == "ivfpq":
-                # codes are not invertible enough to retrain from:
-                # rebuild re-saves from the source-of-truth embeddings,
-                # carrying the stored conf (residual, code geometry)
-                pqmod.rebuild_ivfpq_index(
-                    spark, args.path, emb, n_centroids=args.n_centroids
-                )
-            elif args.family == "ivf":
-                similarity.rebuild_ivf_index(
-                    spark, args.path, n_centroids=args.n_centroids
-                )
-            else:
-                similarity.rebuild_lsh_index(
-                    spark, args.path,
-                    n_tables=args.n_tables,
-                    n_planes=args.n_planes,
-                    max_bucket=args.max_bucket,
-                )
-            print(f"rebuilt {args.family} index at {args.path}")
+            # IVF-PQ codes cannot retrain: it re-saves from the source
+            # embeddings; IVF and LSH retrain on their stored vectors
+            similarity.rebuild_index(
+                spark, args.path,
+                corpus=emb if codec.needs_corpus else None,
+                n_centroids=args.n_centroids,
+                n_tables=args.n_tables,
+                n_planes=args.n_planes,
+                max_bucket=args.max_bucket,
+            )
+            print(f"rebuilt {family} index at {args.path}")
         else:
             queries = emb.where(F.col("vec_id") < args.n_queries)
-            if args.family == "ivfpq":
-                serve = lambda q, p, k: pqmod.query_ivfpq_index(
-                    q, p, k=k, n_probe=args.n_probe, rescore=emb
+            if family == "ivfpq":
+                served = pqmod.query_ivfpq_index(
+                    queries, args.path, k=args.k, n_probe=args.n_probe,
+                    rescore=emb,
                 )
-            elif args.family == "ivf":
-                serve = lambda q, p, k: similarity.query_ivf_index(
-                    q, p, k=k, n_probe=args.n_probe
+            elif family == "ivf":
+                served = similarity.query_ivf_index(
+                    queries, args.path, k=args.k, n_probe=args.n_probe
                 )
             else:
-                serve = lambda q, p, k: similarity.query_lsh_index(
-                    q, p, k=k, n_multiprobe=args.n_multiprobe
+                served = similarity.query_lsh_index(
+                    queries, args.path, k=args.k,
+                    n_multiprobe=args.n_multiprobe,
                 )
-            serve(queries, args.path, k=args.k).orderBy(
-                "query_id", "rnk"
-            ).show(args.limit, truncate=False)
+            served.orderBy("query_id", "rnk").show(args.limit, truncate=False)
         return 0
 
     if args.query not in qs:

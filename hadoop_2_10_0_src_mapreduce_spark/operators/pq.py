@@ -56,21 +56,37 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_2_10_0_src_mapreduce_spark.sources.readers import read_metadata
-from hadoop_2_10_0_src_mapreduce_spark.sources.writers import write_metadata
-
-from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-    _centroid_table,
+from hadoop_2_10_0_src_mapreduce_spark.operators.index_store import (
+    Codec,
+    _apply_tombstones,
     _conf_table,
+    _meta_table,
+    _pin_index,
+    _read_conf,
+    _write_rows,
+    append_to_index,
+)
+from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
+    IVF_LAYOUT,
+    _centroid_matrix,
+    _centroid_table,
     _f64_lists,
     _f64_rows,
     _global_topk,
+    _home_lists,
     _md5_key,
-    _meta_table,
-    _pin,
+    _resolve_centroids,
+    _resolve_list_dirs,
+    _resolve_probes,
     _score_pairs_arrow,
     _seq_matdot,
     _seq_sq_norms,
+    train_ivf_centroids,
+)
+from hadoop_2_10_0_src_mapreduce_spark.sources.readers import read_metadata
+from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
+    pin_generation,
+    write_metadata,
 )
 
 
@@ -183,10 +199,6 @@ def train_pq_codebooks(
     dsub = _pq_geometry(mat.shape[1], n_subspaces)
     mat = _normalize_rows(mat)
     if centers is not None:
-        from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-            _seq_matdot,
-        )
-
         assign = np.argsort(
             -_seq_matdot(mat, centers), axis=1, kind="stable"
         )[:, 0]
@@ -317,8 +329,8 @@ def pq_decode(
     RESIDUAL-encoded rows (``save_ivfpq_index(residual=True)``) must
     pass the index's ``centers`` so the home-list centroid is added
     back — decoding residual codes without it returns near-zero
-    residuals, not vectors (check ``_ivfpq_conf(path)["residual"]``
-    when auditing a stored index)."""
+    residuals, not vectors (check the ``residual`` flag in
+    ``<path>/conf`` when auditing a stored index)."""
     m, _, dsub = codebooks.shape
     bc = codes_df.sparkSession.sparkContext.broadcast((codebooks, centers))
 
@@ -482,6 +494,23 @@ def _adc_per_partition(
     )
 
 
+def _ranked(
+    per_part: DataFrame, queries: DataFrame, rescore: DataFrame | None, *,
+    k: int, n_cand: int, id_col: str, vec_col: str, round_digits: int,
+) -> DataFrame:
+    """The global top-k of per-partition ADC candidates; with
+    ``rescore``, the top ``n_cand`` re-ranked by exact cosine against
+    it (query vectors re-read from the query batch)."""
+    if rescore is None:
+        return _global_topk(per_part, k)
+    cands = _global_topk(per_part, n_cand).select("query_id", "neighbor_id")
+    exact = _score_pairs_arrow(
+        queries.select(id_col, vec_col), cands, id_col, vec_col,
+        round_digits, emb_right=rescore.select(id_col, vec_col),
+    )
+    return _global_topk(exact, k)
+
+
 def pq_topk(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -527,30 +556,27 @@ def pq_topk(
         id_col=id_col, codes_col=codes_col,
         n_cand=n_cand, round_digits=round_digits,
     )
-    if rescore is None:
-        return _global_topk(per_part, k)
-    cands = _global_topk(per_part, n_cand).select("query_id", "neighbor_id")
-    exact = _score_pairs_arrow(
-        queries.select(id_col, vec_col), cands, id_col, vec_col,
-        round_digits, emb_right=rescore.select(id_col, vec_col),
+    return _ranked(
+        per_part, queries, rescore, k=k, n_cand=n_cand, id_col=id_col,
+        vec_col=vec_col, round_digits=round_digits,
     )
-    return _global_topk(exact, k)
 
 
-# --- persisted IVF-PQ index: build / serve / append / compact -----------
+# --- persisted IVF-PQ index: build / serve and the codec ---------------
 # The 100 TB serving composition: IVF routing prunes the SCAN to the
 # probed list directories (same partition-pruned layout as
 # save_ivf_index) and PQ shrinks what those directories HOLD to m
 # smallints per vector — together a query batch reads p/c of a 32×-
-# smaller store. Tombstone deletes (delete_from_index) and compaction
-# reuse the shared id-based machinery; the layout is
+# smaller store. Append, delete, compact and rebuild are the index
+# store's (``operators.index_store``); the layout is
+#   <path>/conf        (n_subspaces, n_codes, n_codes_trained, residual)
 #   <path>/centroids   (list_id, centroid array<double>)   — kilobytes
 #   <path>/codebooks   (subspace, code, codeword array<double>) — ~MB
 #   <path>/lists       (id, pq_codes) PARTITIONED BY list_id
 # Full-precision vectors are NOT stored: rescore-grade serving passes
 # the source-of-truth embedding table via ``rescore=``, and rebuilds
-# re-run save_ivfpq_index over that table (codes are not invertible
-# enough to retrain from).
+# take it as ``corpus=`` (codes are not invertible enough to retrain
+# from).
 
 
 def save_ivfpq_index(
@@ -589,13 +615,6 @@ def save_ivfpq_index(
     1516 auto lists). Default "auto" resolves from the list count at
     save time (dirs below 256 lists, flat at or above); maintenance
     follows the stored layout."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _resolve_centroids,
-        _resolve_list_dirs,
-        ivf_assign,
-        train_ivf_centroids,
-    )
-
     vecs = emb.select(id_col, vec_col)
     train = train_df.select(id_col, vec_col) if train_df is not None else vecs
     # "auto" sizes to the FILED corpus (same rule as save_ivf_index),
@@ -619,7 +638,7 @@ def save_ivfpq_index(
     # geometry even after the corpus grows far past it. The trained
     # count is kept alongside for audits (index_stats / debugging);
     # readers that need the real codebook shape read the codebooks
-    # table itself (_load_pq_codebooks).
+    # table itself (_codebook_array).
     m, k_trained, dsub = books.shape
     write_metadata(
         f"{path}/conf",
@@ -641,48 +660,25 @@ def save_ivfpq_index(
             "codeword": _f64_lists(books.reshape(m * k_trained, dsub)),
         }),
     )
-    home = (
-        ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
     # unpacked codes: parquet dictionary+RLE beats raw bytes on disk
     # (see pq_encode's measured note); kernels accept either layout
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _write_ivf_lists,
-    )
-
     codes = pq_encode(
-        home, books, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",),
+        _home_lists(vecs, cents, vec_col), books, id_col=id_col,
+        vec_col=vec_col, keep_cols=IVF_LAYOUT,
         centers=cents if residual else None,
     )
-    _write_ivf_lists(codes, path, list_dirs, mode="overwrite")
+    _write_rows(codes, f"{path}/lists", IVF_LAYOUT, list_dirs, mode="overwrite")
 
 
-def _ivfpq_conf(path: str) -> dict:
-    """The stored build conf. A missing ``conf`` dir falls back to the
-    ``conf.__old__`` copy a crash inside a pre-r7 rebuild's sequential
-    swap could leave behind (mirroring ``_ivf_list_dirs``'s
-    ``lists.__old__`` fallback) — heal-by-re-run must recover the REAL
-    build contract, never silently default a residual index back to
-    non-residual. Only when neither exists (an index written before
-    the conf file did) does it read as the original non-residual
-    layout."""
-    import pathlib
-
-    for name in ("conf", "conf.__old__"):
-        if (pathlib.Path(path) / name).exists():
-            return read_metadata(_pin(f"{path}/{name}")).to_pylist()[0]
-    return {"residual": False}
-
-
-def _load_pq_codebooks(path: str) -> np.ndarray:
-    t = read_metadata(_pin(f"{path}/codebooks")).sort_by(
-        [("subspace", "ascending"), ("code", "ascending")]
-    )
+def _codebook_array(t: pa.Table) -> np.ndarray:
+    t = t.sort_by([("subspace", "ascending"), ("code", "ascending")])
     m = pc.max(t.column("subspace")).as_py() + 1
     k = pc.max(t.column("code")).as_py() + 1
     return _f64_rows(t.column("codeword")).reshape(m, k, -1)
+
+
+def _load_pq_codebooks(path: str) -> np.ndarray:
+    return _codebook_array(read_metadata(pin_generation(f"{path}/codebooks")))
 
 
 def query_ivfpq_index(
@@ -721,20 +717,11 @@ def query_ivfpq_index(
     query batch itself (external query ids need not appear in the
     corpus) — returned sims are then true cosines (the index itself
     stores no full-precision vectors to rescore against)."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _apply_tombstones,
-        _load_ivf_centroids,
-        _seq_matdot,
-    )
-
     spark = queries.sparkSession
-    cents = _load_ivf_centroids(path)
-    books = _load_pq_codebooks(path)
-    residual = _ivfpq_conf(path)["residual"]
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _resolve_probes,
-    )
-
+    pins = _pin_index(path, IVFPQ_CODEC.subdirs)
+    cents = _centroid_matrix(read_metadata(pins["centroids"]))
+    books = _codebook_array(read_metadata(pins["codebooks"]))
+    residual = _read_conf(pins["conf"]).get("residual", False)
     n_probe = _resolve_probes(len(cents), n_probe)
     qids, qmat = _collect_query_batch(
         queries, id_col, vec_col, max_queries, "query_ivfpq_index"
@@ -748,7 +735,7 @@ def query_ivfpq_index(
         probe_ok[i, order[i]] = True
     probed = sorted(int(x) for x in np.unique(order))
     stored = _apply_tombstones(
-        spark.read.parquet(_pin(f"{path}/lists")).where(
+        spark.read.parquet(pins["lists"]).where(
             F.col("list_id").isin(probed)
         ),
         path,
@@ -763,161 +750,50 @@ def query_ivfpq_index(
         probe_ok=probe_ok,
         list_offsets=q_dot_c if residual else None,
     )
-    if rescore is None:
-        return _global_topk(per_part, k)
-    cands = _global_topk(per_part, n_cand).select("query_id", "neighbor_id")
-    exact = _score_pairs_arrow(
-        queries.select(id_col, vec_col), cands, id_col, vec_col,
-        round_digits, emb_right=rescore.select(id_col, vec_col),
-    )
-    return _global_topk(exact, k)
-
-
-def append_to_ivfpq_index(
-    new_emb: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold a NEW vector batch into an existing IVF-PQ index without
-    retraining: centroids AND codebooks stay fixed (the PQ analogue of
-    the fixed-partition-function contract — re-deriving codebooks
-    would silently re-mean every stored code), the batch assigns to
-    home lists and encodes under the stored codebooks, and the filed
-    codes append to the list partitions. Equals a fresh
-    ``save_ivfpq_index(union, train_df=original)`` bit for bit (pinned
-    by test). Same novel-id contract as the IVF/LSH appends: tombstone
-    first to update."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _load_ivf_centroids,
-        ivf_assign,
+    return _ranked(
+        per_part, queries, rescore, k=k, n_cand=n_cand, id_col=id_col,
+        vec_col=vec_col, round_digits=round_digits,
     )
 
-    spark = new_emb.sparkSession
-    cents = _load_ivf_centroids(path)
-    books = _load_pq_codebooks(path)
-    home = (
-        ivf_assign(
-            new_emb.select(id_col, vec_col), cents, vec_col=vec_col,
-            n_probe=1, keep_vec=True,
-        )
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    stored_schema = spark.read.parquet(_pin(f"{path}/lists")).schema
-    stored_packed = stored_schema["pq_codes"].dataType.simpleString() == "binary"
-    residual = _ivfpq_conf(path)["residual"]
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _ivf_list_dirs,
-        _write_ivf_lists,
-    )
 
-    codes = pq_encode(
-        home, books, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",),
-        packed=stored_packed,
+def _ivfpq_file(vecs, pins, schema, id_col, vec_col) -> DataFrame:
+    """Home lists and codes under the FIXED centroids and codebooks
+    (re-deriving codebooks would silently re-mean every stored code),
+    packed or not as the store is, residual as the conf says."""
+    cents = _centroid_matrix(read_metadata(pins["centroids"]))
+    residual = _read_conf(pins["conf"]).get("residual", False)
+    return pq_encode(
+        _home_lists(vecs, cents, vec_col),
+        _codebook_array(read_metadata(pins["codebooks"])),
+        id_col=id_col, vec_col=vec_col, keep_cols=IVF_LAYOUT,
+        packed=schema["pq_codes"].dataType.simpleString() == "binary",
         centers=cents if residual else None,
     )
-    _write_ivf_lists(codes, path, _ivf_list_dirs(path), mode="append")
 
 
-def rebuild_ivfpq_index(
-    spark,
-    path: str,
-    source_df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int | str | None = None,
-    n_iters: int = 5,
-    max_train: int = 4096,
-) -> None:
-    """RETRAIN an IVF-PQ index from its source-of-truth embeddings —
-    the rebuild ``index_stats`` recommends when the corpus outgrows
-    the build-time geometry. PQ codes cannot retrain from themselves
-    (quantization already threw the detail away), so unlike
-    ``rebuild_ivf_index`` the source table is REQUIRED; everything
-    else mirrors it: tombstoned ids are excluded (the rebuild IS a
-    compaction — the tombstone dir is dropped), the stored conf's
-    n_subspaces / n_codes / residual carry over so a rebuild can't
-    silently fork the index's quality contract, and ``n_centroids``
-    defaults to "auto" (re-size to the live corpus).
-
-    The fresh index builds in a sibling ``.__rebuild__`` dir and swaps
-    in with ONE top-level rename of the index root (marked complete by
-    a ``__complete__`` file written after the last subdir lands), so a
-    concurrent reader can never see NEW codebooks under OLD codes or
-    any other mixed-subdir state — the pre-r7 per-subdir swap loop had
-    exactly that window, silently skewing ADC candidate ranking. The
-    one remaining reader-visible state is the whole-index ENOENT blink
-    between the two renames (the documented ``atomic_swap_write``
-    contract). A crash anywhere is healed by re-running the rebuild:
-    roll FORWARD when the sibling build completed, roll BACK to the
-    ``.__old__`` root otherwise. Note: because the whole root is
-    rebuilt fresh, a lists dir converted with ``enable_pointer_swaps``
-    comes back as a REAL directory — re-run ``index pointer`` after an
-    ivfpq rebuild if compact-while-serving is needed (the IVF/LSH
-    rebuilds swap subdirs in place and KEEP pointer mode)."""
-    import pathlib
-    import shutil
-
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _ivf_list_dirs,
-        _tombstone_df,
-    )
-
-    p = pathlib.Path(path)
-    tmp = f"{path}.__rebuild__"
-    old = f"{path}.__old__"
-    done = pathlib.Path(tmp) / "__complete__"
-    if not p.exists():
-        # heal a crash inside a previous rebuild's swap window
-        if done.exists():
-            shutil.move(tmp, path)  # roll forward: fresh build is whole
-        elif pathlib.Path(old).exists():
-            shutil.move(old, path)  # roll back: build never finished
-        else:
-            raise FileNotFoundError(
-                f"rebuild_ivfpq_index: no index at {path} and no "
-                "recoverable .__rebuild__/.__old__ sibling"
-            )
-    (p / "__complete__").unlink(missing_ok=True)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    conf = _ivfpq_conf(path)
-    list_dirs = _ivf_list_dirs(path)
-    live = source_df.select(id_col, vec_col)
-    tomb = _tombstone_df(spark, path)
-    if tomb is not None:
-        live = live.join(
-            tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-    save_ivfpq_index(
-        live, tmp, id_col=id_col, vec_col=vec_col,
-        n_centroids="auto" if n_centroids is None else n_centroids,
-        n_subspaces=conf.get("n_subspaces", 8),
-        n_codes=conf.get("n_codes", 256),
-        n_iters=n_iters, max_train=max_train,
-        residual=conf["residual"],
-        list_dirs=list_dirs,
-    )
-    done.touch()
-    # single top-level swap: rename is atomic per directory, so readers
-    # see the OLD index, ENOENT, or the NEW index — never a mix
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    (p / "__complete__").unlink(missing_ok=True)
-    shutil.rmtree(old)  # tombstones ride out with the old root
+def _ivfpq_stored_conf(pins) -> dict:
+    """What a rebuild keeps: the code geometry and residual flag (a
+    rebuild must not fork the index's quality contract). The list
+    count re-sizes to the live corpus unless the caller pins it."""
+    conf = _read_conf(pins["conf"])
+    return {
+        "n_centroids": "auto",
+        "n_subspaces": conf.get("n_subspaces", 8),
+        "n_codes": conf.get("n_codes", 256),
+        "residual": conf.get("residual", False),
+    }
 
 
-def compact_ivfpq_index(spark, path: str) -> None:
-    """Physically apply tombstones and defragment the code store —
-    the PQ codes layout satisfies ``compact_ivf_index``'s layout
-    detection (the id column is the only scalar outside the layout),
-    so this is the same atomic-swap rewrite."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        compact_ivf_index,
-    )
-
-    compact_ivf_index(spark, path)
+IVFPQ_CODEC = Codec(
+    family="ivfpq",
+    rows="lists",
+    layout=IVF_LAYOUT,
+    meta=("conf", "centroids", "codebooks"),
+    geometry=frozenset({"n_centroids", "n_iters", "max_train"}),
+    dirs_kw="list_dirs",
+    file=_ivfpq_file,
+    save=save_ivfpq_index,
+    stored_conf=_ivfpq_stored_conf,
+    needs_corpus=True,
+)
+append_to_ivfpq_index = append_to_index

@@ -45,15 +45,26 @@ caller needs:
   scoring, in exchange for bit-exact oracle verifiability of the
   whole query.
 
-Index store (the ``save_/query_/append_to_/compact_/rebuild_*_index``
-functions here and their IVF-PQ twins in ``pq.py``): an index is a
-directory of parquet subdirectories. BOUNDED metadata — conf,
-centroids, PQ codebooks and list-of-ids tombstone batches — is read
-and written on the driver with Arrow (``sources.readers.read_metadata``
-/ ``sources.writers.write_metadata``) and runs no Spark job;
-corpus-scale data — lists, buckets, DataFrame deletes and every scan
-over them — goes through Spark. Paths are local/NFS only: swaps and
-metadata files rely on POSIX renames.
+Index store: an index is a directory of parquet subdirectories — one
+ROW STORE (``lists`` or ``buckets``, corpus-scale, written and scanned
+by Spark), BOUNDED metadata (conf, centroids, PQ codebooks: read and
+written on the driver with Arrow through ``read_metadata`` /
+``write_metadata`` in ``sources``, no Spark job) and, once ids are
+deleted, ``tombstones``. Every lifecycle step that does not depend on
+the family lives in ``operators.index_store``: family detection, set
+pinning, the stored layout, the row writer, tombstones,
+``append_to_index``, ``delete_from_index``, ``compact_index`` and
+``rebuild_index``. Each family — IVF and LSH here, IVF-PQ in ``pq`` —
+keeps its ``save_*_index`` and ``query_*_index`` and supplies a small
+``Codec``: how to file and encode new rows, which metadata dirs it
+stores, and which build settings a rebuild carries over. Rebuild has
+ONE commit protocol: the family's ``save_*_index`` writes the new
+index to a sibling directory, then each subdir moves into the live
+path through the directory swap (``sources.writers._swap_in``), the
+row store first, then the metadata, so a pointer-mode subdir stays
+pointer-mode and a crash anywhere heals by re-running the rebuild.
+Paths are local/NFS only: swaps and metadata files rely on POSIX
+renames.
 
 Caching contract: the ANN paths ``persist()`` their multiply-read
 intermediates (capped bucket memberships, probe assignments) and do
@@ -71,46 +82,35 @@ import hashlib
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# the lifecycle API (append/delete/compact/rebuild) is re-exported here
+from hadoop_2_10_0_src_mapreduce_spark.operators.index_store import (  # noqa: F401
+    Codec,
+    _apply_tombstones,
+    _conf_table,
+    _dequantized,
+    _meta_table,
+    _pin_index,
+    _read_conf,
+    _tombstone_df,
+    _write_rows,
+    append_to_index,
+    compact_index,
+    delete_from_index,
+    index_codec,
+    rebuild_index,
+)
 from hadoop_2_10_0_src_mapreduce_spark.sources.readers import (
-    footer_schema,
     local_values_df,
     read_metadata,
 )
-from hadoop_2_10_0_src_mapreduce_spark.sources.writers import write_metadata
-
-
-def _pin(path: str) -> str:
-    """Generation-pin an index subdirectory before scanning it (see
-    ``sources.writers.pin_generation``): on a pointer-mode dir this
-    returns the concrete ``.__gen_N__`` path so the scan's file
-    listing survives a concurrent ``atomic_swap_write`` — the grace
-    generation is kept on disk but only protects readers whose plans
-    hold the pinned paths, not link-relative ones (the r10
-    serve-during-compaction ENOENT race). No-op on plain dirs, so
-    every reader calls it unconditionally."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        pin_generation,
-    )
-
-    return pin_generation(path)
-
-
-def _pin_index(path: str, names: tuple[str, ...]) -> dict[str, str]:
-    """Consistent multi-subdirectory pin for one logical index (see
-    ``sources.writers.pin_generations``): serving readers that scan
-    two or more subdirectories in one query (centroids+lists,
-    conf+buckets) must pin them as a SET, or a rebuild's sequential
-    swaps landing between the pins serve mixed generations — silently
-    wrong neighbors, not an ENOENT (the r11 ADVICE low)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        pin_generations,
-    )
-
-    return pin_generations(path, names)
+from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
+    pin_generation,
+    write_metadata,
+)
 
 
 # --- adaptive geometry (the sf1 scaling-gate fix) ---------------------
@@ -1819,6 +1819,8 @@ def semantic_dedup(
 # lesson at 16×1024 LSH buckets: 13×). 256 sits safely below where
 # the dir layout was measured losing and above every fixture geometry.
 FLAT_LISTS_THRESHOLD = 256
+IVF_LAYOUT = ("list_id",)
+LSH_LAYOUT = ("table_idx", "bucket")
 
 
 def _resolve_list_dirs(list_dirs, n_lists: int) -> bool:
@@ -1826,47 +1828,40 @@ def _resolve_list_dirs(list_dirs, n_lists: int) -> bool:
     picks directory-per-list below ``FLAT_LISTS_THRESHOLD`` lists and
     the flat list_id-sorted layout at or above it. Explicit True/False
     always win — the override for individually-huge lists (dirs) or
-    benchmarking (flat). Rebuild/append/compact FOLLOW the stored
-    layout (``_ivf_list_dirs`` detection) rather than re-resolving, so
-    maintenance never silently rewrites a layout the operator chose;
-    re-save to change it."""
+    benchmarking (flat). Maintenance FOLLOWS the stored layout
+    (``index_store._stored_dirs``) rather than re-resolving, so it
+    never silently rewrites a layout the operator chose; re-save to
+    change it."""
     if list_dirs == "auto":
         return n_lists < FLAT_LISTS_THRESHOLD
     return list_dirs
 
 
-def _ivf_list_dirs(path: str) -> bool:
-    """The stored lists layout: directory-per-list (original) vs flat
-    (partitionless, list_id-sorted files — same trade as the LSH
-    flat layout). Detected from the directory shape, so pre-layout
-    indexes and every maintenance op agree without a conf change.
-    A missing lists dir (a crash inside a rebuild's swap window)
-    falls back to the ``.__old__`` copy's shape, then to the default
-    directory layout — heal-by-re-run must not die on detection."""
-    import pathlib
-
-    for name in ("lists", "lists.__old__"):
-        lists = pathlib.Path(path) / name
-        if lists.exists():
-            return any(
-                d.name.startswith("list_id=")
-                for d in lists.iterdir()
-                if d.is_dir()
-            )
-    return True
+def _home_lists(vecs: DataFrame, cents: np.ndarray, vec_col: str) -> DataFrame:
+    """Each vector filed into its nearest list, vector kept — the
+    stable argmax every IVF and IVF-PQ build and append shares."""
+    return (
+        ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
+        .where(F.col("probe_rank") == 0)
+        .drop("probe_rank")
+    )
 
 
-def _write_ivf_lists(
-    filed: DataFrame, path: str, list_dirs: bool, *, mode: str
-) -> None:
-    if list_dirs:
-        filed.repartition("list_id").write.mode(mode).partitionBy(
-            "list_id"
-        ).parquet(f"{path}/lists")
-    else:
-        filed.repartition("list_id").sortWithinPartitions(
-            "list_id"
-        ).write.mode(mode).parquet(f"{path}/lists")
+def _like_stored(
+    rows: DataFrame, schema, id_col: str, vec_col: str,
+    keep_cols: tuple[str, ...],
+) -> DataFrame:
+    """New rows in a float family's stored payload form: int8 when the
+    store is quantized, else cast to the stored vector type (an
+    array<double> file in an array<float> store would fork the parquet
+    schema and fail every later read of the partition)."""
+    if "qvec" in schema.fieldNames():
+        return quantize_embeddings(
+            rows, id_col=id_col, vec_col=vec_col, keep_cols=keep_cols
+        )
+    return rows.withColumn(
+        vec_col, F.col(vec_col).cast(schema[vec_col].dataType)
+    )
 
 
 def save_ivf_index(
@@ -1906,12 +1901,10 @@ def save_ivf_index(
     Centroids always stay float — they are kilobytes.
 
     ``train_df`` trains the centroids on a DIFFERENT frame than the
-    one being filed — the rebuild-after-append shape: centroids fixed
-    to the original training corpus, the grown corpus filed under
-    them. ``append_to_ivf_index`` is the incremental equivalent (same
-    result, no full rewrite); this parameter exists so that
-    equivalence is testable and so periodic rebuilds can pin training
-    data explicitly.
+    one being filed — centroids fixed to the original training corpus,
+    the grown corpus filed under them. ``append_to_index`` is the
+    incremental equivalent (same result, no full rewrite); this
+    parameter makes that equivalence testable.
 
     ``n_centroids="auto"`` sizes the list count to the FILED corpus
     (``adaptive_centroids``) so list occupancy — and with it both the
@@ -1926,8 +1919,7 @@ def save_ivf_index(
     list count at save time (``_resolve_list_dirs``: dirs below
     {FLAT_LISTS_THRESHOLD}=256 lists, flat at or above — the measured
     crossover), so an adaptive-geometry build at scale gets the fast
-    layout WITHOUT the operator knowing the dial exists. Maintenance
-    ops follow the stored layout from the directory shape."""
+    layout WITHOUT the operator knowing the dial exists."""
     n_centroids = _resolve_centroids(emb, n_centroids, cap=max_train)
     list_dirs = _resolve_list_dirs(list_dirs, n_centroids)
     vecs = emb.select(id_col, vec_col)
@@ -1940,19 +1932,12 @@ def save_ivf_index(
         max_train=max_train,
     )
     write_metadata(f"{path}/centroids", _centroid_table(cents))
-    home = (
-        ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
+    home = _home_lists(vecs, cents, vec_col)
     if quantize:
         home = quantize_embeddings(
-            home, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",)
+            home, id_col=id_col, vec_col=vec_col, keep_cols=IVF_LAYOUT
         )
-    # cluster the write by the partition column: one task owns each
-    # list, so each directory gets ONE file set instead of one per
-    # shuffle task (the small-files debt index_stats would later flag)
-    _write_ivf_lists(home, path, list_dirs, mode="overwrite")
+    _write_rows(home, f"{path}/lists", IVF_LAYOUT, list_dirs, mode="overwrite")
 
 
 def query_ivf_index(
@@ -1984,7 +1969,7 @@ def query_ivf_index(
     (module caching contract); a serving loop should
     ``spark.catalog.clearCache()`` between batches it is done with."""
     spark = queries.sparkSession
-    pins = _pin_index(path, ("centroids", "lists"))
+    pins = _pin_index(path, IVF_CODEC.subdirs)
     cents = _centroid_matrix(read_metadata(pins["centroids"]))
     n_probe = _resolve_probes(len(cents), n_probe)
     fan = ivf_assign(
@@ -2010,16 +1995,9 @@ def query_ivf_index(
         id_col,
     )
     quantized = "qvec" in stored.columns
-    if quantized:  # int8 index: dequantize in the scan projection
-        stored = stored.select(
-            F.col(id_col),
-            F.transform(
-                "qvec", lambda q: q.cast("double") * F.col("scale")
-            ).alias(vec_col),
-            "list_id",
-        )
     lists = (
-        stored.withColumn("probe_rank", F.lit(0))
+        _dequantized(stored, id_col, vec_col, IVF_LAYOUT)
+        .withColumn("probe_rank", F.lit(0))
         .select(id_col, vec_col, "list_id", "probe_rank")
     )
     fan_sel = fan.select(id_col, vec_col, "list_id", "probe_rank")
@@ -2036,9 +2014,7 @@ def query_ivf_index(
         block_size=block_size,
         round_digits=round_digits,
         self_query=False,
-        id_type={
-            f.name: f.dataType.simpleString() for f in queries.schema.fields
-        }[id_col],
+        id_type=dict(queries.dtypes)[id_col],
     )
 
 
@@ -2073,8 +2049,8 @@ def save_lsh_index(
       read-bound at adaptive geometry: 16·2¹⁰ = 16k tiny directories
       made a bare count() of a 20k-vector index take 37 s and serving
       35 s; the flat layout reads the same probe set in ~1 s (numbers
-      in SURVEY §8). Pre-existing indexes (conf without the column)
-      read as bucket_dirs=True.
+      in SURVEY §8). Maintenance reads the layout from the directory
+      shape; the conf column records it.
 
     ``quantize=True`` stores int8 qvec + per-vector scale instead of
     the float vector — offsets the L-fold copy cost 4–8×; the server
@@ -2111,39 +2087,11 @@ def save_lsh_index(
     stored = capped.join(emb.select(id_col, vec_col), id_col)
     if quantize:
         stored = quantize_embeddings(
-            stored, id_col=id_col, vec_col=vec_col,
-            keep_cols=("table_idx", "bucket"),
+            stored, id_col=id_col, vec_col=vec_col, keep_cols=LSH_LAYOUT
         )
-    _write_lsh_buckets(stored, path, bucket_dirs, mode="overwrite")
-
-
-def _lsh_bucket_dirs(conf_row) -> bool:
-    """The stored bucket layout; confs written before the column
-    existed are the original per-(table, bucket) directory layout."""
-    try:
-        return bool(conf_row.bucket_dirs)
-    except AttributeError:
-        return True
-
-
-def _write_lsh_buckets(
-    stored: DataFrame, path: str, bucket_dirs: bool, *, mode: str
-) -> None:
-    if bucket_dirs:
-        stored.repartition("table_idx", "bucket").write.mode(
-            mode
-        ).partitionBy("table_idx", "bucket").parquet(f"{path}/buckets")
-    else:
-        # sort by (table_idx, bucket): the file writer requires output
-        # ordered by the partition column and would otherwise insert
-        # its OWN Sort(table_idx), leaving bucket order to sort
-        # stability — an implementation detail, not a contract, and
-        # the row-group skip silently dies without the order
-        stored.repartition("table_idx").sortWithinPartitions(
-            "table_idx", "bucket"
-        ).write.mode(mode).partitionBy("table_idx").parquet(
-            f"{path}/buckets"
-        )
+    _write_rows(
+        stored, f"{path}/buckets", LSH_LAYOUT, bucket_dirs, mode="overwrite"
+    )
 
 
 def query_lsh_index(
@@ -2188,16 +2136,16 @@ def query_lsh_index(
     contract); a serving loop should ``spark.catalog.clearCache()``
     between batches it is done with."""
     spark = queries.sparkSession
-    pins = _pin_index(path, ("conf", "buckets"))
+    pins = _pin_index(path, LSH_CODEC.subdirs)
     conf = _read_conf(pins["conf"])
-    planes = md5_planes(conf.n_tables, conf.n_planes, conf.dim)
+    planes = md5_planes(conf["n_tables"], conf["n_planes"], conf["dim"])
     if n_multiprobe == "auto":
-        n_multiprobe = adaptive_multiprobe(conf.n_planes, conf.n_tables)
+        n_multiprobe = adaptive_multiprobe(conf["n_planes"], conf["n_tables"])
     qsig = lsh_signatures(
         queries.select(id_col, vec_col),
         vec_col=vec_col,
-        n_planes=conf.n_planes,
-        n_tables=conf.n_tables,
+        n_planes=conf["n_planes"],
+        n_tables=conf["n_tables"],
         planes=planes,
         n_flip=int(n_multiprobe),
     ).persist()
@@ -2208,9 +2156,7 @@ def query_lsh_index(
     for r in qsig.select("table_idx", "bucket").distinct().collect():
         probed.setdefault(r.table_idx, set()).add(r.bucket)
     if not probed:  # empty query batch: empty result, like the IVF twin
-        id_type = {
-            f.name: f.dataType.simpleString() for f in queries.schema.fields
-        }[id_col]
+        id_type = dict(queries.dtypes)[id_col]
         return local_values_df(
             spark,
             [],
@@ -2247,16 +2193,9 @@ def query_lsh_index(
         raw = raw.join(
             F.broadcast(pairs_df), ["table_idx", "bucket"], "left_semi"
         )
-    stored = _apply_tombstones(raw, path, id_col)
-    if "qvec" in stored.columns:  # int8 index: dequantize in the scan
-        stored = stored.select(
-            F.col(id_col),
-            F.transform(
-                "qvec", lambda q: q.cast("double") * F.col("scale")
-            ).alias(vec_col),
-            "table_idx",
-            "bucket",
-        )
+    stored = _dequantized(
+        _apply_tombstones(raw, path, id_col), id_col, vec_col, LSH_LAYOUT
+    )
     cands = (
         qsig.select(F.col(id_col).alias("query_id"), "table_idx", "bucket")
         .join(
@@ -2283,36 +2222,7 @@ def query_lsh_index(
     return _global_topk(scored, k)
 
 
-# --- index maintenance: append / delete / compact ----------------------
-# The serving lifecycle past build-once: fold new vector batches into an
-# existing index WITHOUT retraining or rewriting it, tombstone deletes
-# so queries stop returning removed ids immediately, and compact to
-# physically drop tombstoned rows (and, for LSH, re-apply the global
-# bucket cap) off the ingest path.
-
-
-def _meta_table(cols: dict[str, pa.Array]) -> pa.Table:
-    """Metadata columns as a table with NON-NULL top-level fields —
-    the parquet schema the index's metadata files have always had."""
-    return pa.Table.from_arrays(
-        list(cols.values()),
-        schema=pa.schema(
-            [pa.field(n, a.type, nullable=False) for n, a in cols.items()]
-        ),
-    )
-
-
-def _conf_table(**conf) -> pa.Table:
-    """One conf row: flags are ``boolean``, every other value ``int``."""
-    return _meta_table({
-        k: pa.array([v], pa.bool_() if isinstance(v, bool) else pa.int32())
-        for k, v in conf.items()
-    })
-
-
-def _read_conf(conf_dir: str) -> Row:
-    """The single conf row of a (pinned) conf directory."""
-    return Row(**read_metadata(conf_dir).to_pylist()[0])
+# --- index metadata: centroids ------------------------------------------
 
 
 def _f64_lists(mat: np.ndarray) -> pa.Array:
@@ -2342,304 +2252,84 @@ def _centroid_matrix(table: pa.Table) -> np.ndarray:
 
 
 def _load_ivf_centroids(path: str) -> np.ndarray:
-    return _centroid_matrix(read_metadata(_pin(f"{path}/centroids")))
+    return _centroid_matrix(read_metadata(pin_generation(f"{path}/centroids")))
 
 
-def _index_id_col(df: DataFrame, layout_cols: tuple[str, ...]) -> str:
-    """The id column of a stored index frame: the first SCALAR column
-    that is not part of the layout (vector payloads are arrays, so
-    excluding array types makes this independent of column order)."""
-    return next(
-        f.name
-        for f in df.schema.fields
-        if f.name not in layout_cols
-        and not f.name.startswith("_")
-        and not f.dataType.simpleString().startswith("array")
+# --- the IVF and LSH codecs ---------------------------------------------
+
+
+def _ivf_file(vecs, pins, schema, id_col, vec_col) -> DataFrame:
+    cents = _centroid_matrix(read_metadata(pins["centroids"]))
+    return _like_stored(
+        _home_lists(vecs, cents, vec_col), schema, id_col, vec_col, IVF_LAYOUT
     )
 
 
-def _index_vec_col(df: DataFrame, layout_cols: tuple[str, ...]) -> str:
-    """The stored float-vector column of an index frame: the
-    array-typed field outside the layout, excluding the quantized
-    payload (``qvec``) — the mirror of ``_index_id_col``, so
-    maintenance ops work on indexes saved with a custom ``vec_col``
-    (the CLI passes none) instead of assuming the default name."""
-    return next(
-        f.name
-        for f in df.schema.fields
-        if f.name not in layout_cols
-        and f.name != "qvec"
-        and f.dataType.simpleString().startswith("array")
-    )
-
-
-def _tombstone_df(spark: SparkSession, path: str):
-    """The tombstoned-id frame, or None when no deletes exist. The scan
-    takes its schema from a file footer, so it runs no inference job."""
-    import os
-
-    tomb = f"{path}/tombstones"
-    if not os.path.exists(tomb):
-        return None
-    tomb = _pin(tomb)
-    schema = footer_schema(tomb)
-    if schema is None:
-        return None
-    return spark.read.schema(schema).parquet(tomb).select("id").distinct()
-
-
-def _apply_tombstones(stored: DataFrame, path: str, id_col: str) -> DataFrame:
-    tomb = _tombstone_df(stored.sparkSession, path)
-    if tomb is None:
-        return stored
-    return stored.join(
-        tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-    )
-
-
-def append_to_ivf_index(
-    new_emb: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold a NEW vector batch into an existing ``save_ivf_index``
-    directory WITHOUT retraining: load the kilobyte centroid table,
-    assign each new vector to its home list with the same stable
-    argmax as the original build, and APPEND the filed rows to the
-    list partitions (quantizing iff the stored index is quantized —
-    detected from the stored schema, so callers can't fork the
-    layout).
-
-    Centroids stay FIXED — that is the IVF contract under growth: the
-    partition function must not move, or every stored vector's home
-    list is stale. Appending therefore equals a full rebuild that
-    trains on the ORIGINAL corpus and files the union
-    (``save_ivf_index(union, train_df=original)``) — pinned
-    bit-for-bit by test. Under real distribution drift the quality
-    answer is a periodic retrain-and-rebuild (new index dir + swap),
-    not incremental centroid updates, which would silently invalidate
-    the existing lists.
-
-    Scale shape: one assignment pass over the BATCH only (the stored
-    corpus is never read or rewritten), appended as new parquet files
-    per touched list partition. Many small appends accumulate small
-    files — run ``compact_ivf_index`` from the maintenance schedule,
-    exactly like the streaming dedup index.
-
-    Append assumes NOVEL ids: re-appending an existing id stores a
-    second copy (compaction does not merge copies — it cannot know
-    which vector is current). To UPDATE a vector,
-    ``delete_from_index`` the id first, then append; the tombstone
-    hides the old copy immediately and compaction removes it."""
-    spark = new_emb.sparkSession
-    cents = _load_ivf_centroids(path)
-    home = (
-        ivf_assign(
-            new_emb.select(id_col, vec_col), cents, vec_col=vec_col,
-            n_probe=1, keep_vec=True,
-        )
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    stored_schema = spark.read.parquet(_pin(f"{path}/lists")).schema
-    if "qvec" in stored_schema.fieldNames():
-        home = quantize_embeddings(
-            home, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",)
-        )
-    else:
-        # cast the batch's vector payload to the STORED element type:
-        # appending array<double> files into an array<float> index
-        # would fork the parquet physical schema and fail every
-        # subsequent read of the mixed partition
-        home = home.withColumn(
-            vec_col, F.col(vec_col).cast(stored_schema[vec_col].dataType)
-        )
-    _write_ivf_lists(home, path, _ivf_list_dirs(path), mode="append")
-
-
-def append_to_lsh_index(
-    new_emb: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold a NEW vector batch into an existing ``save_lsh_index``
-    directory: re-derive the md5 hyperplanes from the stored conf
-    (planes are never stored — same conf, bit-identical planes),
-    bucket the batch with the hot-bucket cap applied to the BATCH
-    alone, and append the memberships to the (table_idx, bucket)
-    partitions, quantizing iff the stored index is quantized.
-
-    Because each append caps only its own batch, a bucket hot across
-    many appends can exceed ``max_bucket`` rows on disk;
-    ``compact_lsh_index`` re-applies the GLOBAL md5-order cap, and the
-    two-step result provably equals the build-once index on the union:
-    the global top-``max_bucket`` of (md5(id), id) in any bucket is a
-    subset of every batch's own top-``max_bucket`` (fewer competitors
-    per batch), so no final survivor is ever dropped by a batch cap —
-    the same keeper-set argument as the two-level salted cap.
-
-    Append assumes NOVEL ids (same contract as the IVF twin): serving
-    stays correct with duplicate memberships (candidates and vectors
-    dedupe by id at query time) but storage grows; for updates,
-    tombstone the id first, then append."""
-    spark = new_emb.sparkSession
-    conf = _read_conf(_pin(f"{path}/conf"))
+def _lsh_file(vecs, pins, schema, id_col, vec_col) -> DataFrame:
+    """Memberships under the stored conf, the cap applied to the BATCH
+    alone: a batch's own top-``max_bucket`` by (md5(id), id) is a
+    superset of what survives the global cap, so ``_lsh_recap`` at
+    compaction restores exactly the build-once index."""
+    conf = _read_conf(pins["conf"])
     capped = capped_lsh_buckets(
-        new_emb,
+        vecs,
         id_col=id_col,
         vec_col=vec_col,
-        n_planes=conf.n_planes,
-        n_tables=conf.n_tables,
-        dim=conf.dim,
-        max_bucket=conf.max_bucket,
+        n_planes=conf["n_planes"],
+        n_tables=conf["n_tables"],
+        dim=conf["dim"],
+        max_bucket=conf["max_bucket"],
     )
-    stored = capped.join(new_emb.select(id_col, vec_col), id_col)
-    bucket_schema = spark.read.parquet(_pin(f"{path}/buckets")).schema
-    if "qvec" in bucket_schema.fieldNames():
-        stored = quantize_embeddings(
-            stored, id_col=id_col, vec_col=vec_col,
-            keep_cols=("table_idx", "bucket"),
-        )
-    else:
-        # same stored-type cast as the IVF twin: never fork the
-        # partition files' physical vector type
-        stored = stored.withColumn(
-            vec_col, F.col(vec_col).cast(bucket_schema[vec_col].dataType)
-        )
-    _write_lsh_buckets(stored, path, _lsh_bucket_dirs(conf), mode="append")
-
-
-def delete_from_index(
-    spark: SparkSession,
-    path: str,
-    ids,
-    *,
-    id_col: str = "vec_id",
-) -> None:
-    """TOMBSTONE ids out of an IVF or LSH index directory: append the
-    ids to ``<path>/tombstones``; ``query_ivf_index`` /
-    ``query_lsh_index`` anti-join the stored rows against it, so
-    deleted vectors stop appearing in results IMMEDIATELY, without
-    locating or rewriting their list/bucket files (an id lives in 1
-    IVF partition but up to n_tables LSH partitions — the tombstone
-    covers both layouts with one mechanism). Physical removal happens
-    at ``compact_ivf_index`` / ``compact_lsh_index``.
-
-    ``ids`` is a DataFrame carrying ``id_col`` (corpus-scale deletes
-    stay distributed) or a plain Python iterable for the small case,
-    which the driver appends as one file without a Spark job (int ids
-    are stored as ``bigint``, anything else as ``string``).
-    Tombstones accumulate as (id) parquet appends — ids only, bounded
-    by the delete volume, and the serving anti-join is a broadcast-
-    sized build side until deletes grow corpus-scale, at which point
-    compaction is overdue anyway."""
-    tomb = f"{path}/tombstones"
-    if isinstance(ids, DataFrame):
-        ids.select(F.col(id_col).alias("id")).distinct().write.mode(
-            "append"
-        ).parquet(tomb)
-        return
-    ids = list(ids)
-    if not ids:  # empty delete: no tombstone file, no-op
-        return
-    id_t = pa.int64() if isinstance(ids[0], int) else pa.string()
-    write_metadata(tomb, _meta_table({"id": pa.array(ids, id_t)}), append=True)
-
-
-def _swap_rewrite(
-    df: DataFrame, live: str, partition_cols: list[str],
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Atomic-swap rewrite of one index subdirectory — delegates to the
-    shared ``sources.writers.atomic_swap_write`` (leftover-dir guards,
-    refuse-empty-rewrite: compacting away the LAST vector would brick
-    the index; delete the directory instead). The rewrite is clustered
-    on the partition columns first so each directory comes out as ONE
-    file set — compaction that reproduced the input's fragmentation
-    would defeat its own purpose. ``sort_cols`` sorts rows WITHIN each
-    partition's file (the flat-bucket LSH layout: tight parquet
-    min/max ranges per row group for the probed-bucket filter)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        atomic_swap_write,
+    return _like_stored(
+        capped.join(vecs, id_col), schema, id_col, vec_col, LSH_LAYOUT
     )
 
-    if partition_cols:
-        df = df.repartition(*partition_cols)
-    if sort_cols:
-        df = df.sortWithinPartitions(*sort_cols)
-    atomic_swap_write(df, live, partition_cols)
 
-
-def compact_ivf_index(spark: SparkSession, path: str) -> None:
-    """Physically apply an IVF index's tombstones: rewrite ``lists``
-    without the deleted ids (atomic directory swap — readers see the
-    old file set or the new one, never a mix), then drop the tombstone
-    dir. Also the small-files maintenance pass for append-heavy
-    indexes (each ``append_to_ivf_index`` adds a file set per touched
-    partition). After compaction the directory equals an index built
-    fresh over the surviving corpus with the same centroids."""
-    import pathlib
-    import shutil
-
-    live = f"{path}/lists"
-    tomb = _tombstone_df(spark, path)
-    df = spark.read.parquet(_pin(live))
-    if tomb is not None:
-        id_col = _index_id_col(df, ("list_id", "qvec", "scale"))
-        df = df.join(tomb.withColumnRenamed("id", id_col), id_col, "left_anti")
-    if _ivf_list_dirs(path):
-        _swap_rewrite(df, live, ["list_id"])
-    else:
-        # cluster-then-sort by hand (no partition cols to trigger it)
-        _swap_rewrite(
-            df.repartition("list_id"), live, [], sort_cols=["list_id"]
-        )
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)
-
-
-def compact_lsh_index(spark: SparkSession, path: str) -> None:
-    """Physically apply an LSH index's tombstones AND re-apply the
-    GLOBAL hot-bucket cap across everything the appends accumulated
-    (batch-local caps can overfill a bucket; the global md5-order cap
-    restores exactly the build-once membership — see
-    ``append_to_lsh_index`` for the keeper-set argument), then drop
-    the tombstone dir. Atomic directory swap, same as the IVF twin."""
-    import pathlib
-    import shutil
-
-    conf = _read_conf(_pin(f"{path}/conf"))
-    live = f"{path}/buckets"
-    df = spark.read.parquet(_pin(live))
-    id_col = _index_id_col(df, ("table_idx", "bucket", "qvec", "scale"))
-    tomb = _tombstone_df(spark, path)
-    if tomb is not None:
-        df = df.join(tomb.withColumnRenamed("id", id_col), id_col, "left_anti")
-    # global re-cap: smallest (md5(id), id) per (table, bucket), the
-    # identical rule capped_lsh_buckets applies at build time (the
-    # input here is ≤ appends·max_bucket rows per bucket — already
-    # capped per batch — so a one-level window is not a skew funnel)
-    w = Window.partitionBy("table_idx", "bucket").orderBy("_capkey", id_col)
-    df = (
-        df.withColumn("_capkey", F.md5(F.col(id_col).cast("string")))
+def _lsh_recap(rows: DataFrame, pins, id_col: str) -> DataFrame:
+    """The global cap: smallest (md5(id), id) per (table, bucket), the
+    rule ``capped_lsh_buckets`` applies at build time (the input is at
+    most appends·max_bucket rows per bucket — already capped per batch
+    — so a one-level window is not a skew funnel)."""
+    w = Window.partitionBy(*LSH_LAYOUT).orderBy("_capkey", id_col)
+    return (
+        rows.withColumn("_capkey", F.md5(F.col(id_col).cast("string")))
         .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= conf.max_bucket)
+        .where(F.col("_rn") <= _read_conf(pins["conf"])["max_bucket"])
         .drop("_rn", "_capkey")
     )
-    if _lsh_bucket_dirs(conf):
-        _swap_rewrite(df, live, ["table_idx", "bucket"])
-    else:
-        _swap_rewrite(
-            df, live, ["table_idx"], sort_cols=["table_idx", "bucket"]
-        )
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)
+
+
+IVF_CODEC = Codec(
+    family="ivf",
+    rows="lists",
+    layout=IVF_LAYOUT,
+    meta=("centroids",),
+    geometry=frozenset({"n_centroids", "n_iters", "max_train"}),
+    dirs_kw="list_dirs",
+    file=_ivf_file,
+    save=save_ivf_index,
+    stored_conf=lambda pins: {
+        "n_centroids": read_metadata(pins["centroids"]).num_rows
+    },
+)
+LSH_CODEC = Codec(
+    family="lsh",
+    rows="buckets",
+    layout=LSH_LAYOUT,
+    meta=("conf",),
+    geometry=frozenset({"n_planes", "n_tables", "max_bucket"}),
+    dirs_kw="bucket_dirs",
+    file=_lsh_file,
+    save=save_lsh_index,
+    # the layout is read from the directories and passed as dirs_kw
+    stored_conf=lambda pins: {
+        k: v for k, v in _read_conf(pins["conf"]).items()
+        if k != "bucket_dirs"
+    },
+    recap=_lsh_recap,
+    copies=True,
+)
+append_to_ivf_index = append_to_lsh_index = append_to_index
 
 
 def index_stats(
@@ -2652,8 +2342,8 @@ def index_stats(
     occupancy_warn: float = 4.0,
     recall_target: float | None = None,
 ) -> dict:
-    """Health report for a stored ANN index (IVF or LSH — detected
-    from the directory layout) and the MAINTENANCE TRIGGER the serving
+    """Health report for a stored ANN index of any family (detected
+    from the directory shape) and the MAINTENANCE TRIGGER the serving
     lifecycle needs: appends accumulate file sets per touched
     partition, deletes accumulate tombstones the serve path must
     anti-join every query, and drifted data can pile into one list —
@@ -2663,7 +2353,7 @@ def index_stats(
     itself is safe to run on a 100 TB index.
 
     Returns a dict:
-      family            'ivf' | 'lsh'
+      family            'ivf' | 'lsh' | 'ivfpq'
       rows_live         stored rows still visible to queries
       n_tombstones      distinct tombstoned ids pending compaction
       tombstone_frac    n_tombstones / (rows_live + n_tombstones)*
@@ -2692,34 +2382,18 @@ def index_stats(
     perfectly balanced index then pays occupancy² candidate work —
     and the recommendation names the rebuild with "auto" geometry
     that restores the target."""
-    import pathlib
-
-    p = pathlib.Path(path)
-    if (p / "centroids").exists():
-        # an IVF-PQ dir shares the IVF layout plus a codebooks subdir
-        family = "ivfpq" if (p / "codebooks").exists() else "ivf"
-        live = f"{path}/lists"
-        part_cols = ["list_id"]
-    elif (p / "conf").exists():
-        family, live = "lsh", f"{path}/buckets"
-        part_cols = ["table_idx", "bucket"]
-    else:
-        raise ValueError(f"no IVF or LSH index found at {path}")
-
-    # LSH stats read conf AND buckets — pin them as a set, so a
-    # concurrent rebuild's sequential swaps can't feed the advisor a
-    # geometry that doesn't match the buckets being measured
-    pins = (
-        _pin_index(path, ("conf", "buckets")) if family == "lsh"
-        else {"lists": _pin(live)}
-    )
-    df = spark.read.parquet(pins["buckets" if family == "lsh" else "lists"])
+    codec = index_codec(path)
+    family = codec.family
+    # one pinned set: a concurrent rebuild's swaps can't feed the
+    # advisor a geometry that doesn't match the rows being measured
+    pins = _pin_index(path, codec.subdirs)
+    df = spark.read.parquet(pins[codec.rows])
     quantized = "qvec" in df.columns
     # project the file name BEFORE aggregating (Spark refuses the
     # non-deterministic expression inside an aggregate function)
     per = (
-        df.select(*part_cols, F.input_file_name().alias("_file"))
-        .groupBy(*part_cols)
+        df.select(*codec.layout, F.input_file_name().alias("_file"))
+        .groupBy(*codec.layout)
         .agg(
             F.count(F.lit(1)).alias("rows"),
             F.countDistinct("_file").alias("files"),
@@ -2734,7 +2408,7 @@ def index_stats(
         F.avg("files").alias("files_per_part"),
     ).collect()[0]
     tomb = _tombstone_df(spark, path)
-    n_tomb = tomb.select("id").distinct().count() if tomb is not None else 0
+    n_tomb = tomb.count() if tomb is not None else 0
 
     rows_live = int(row.rows_live or 0)
     tombstone_frac = (
@@ -2746,7 +2420,7 @@ def index_stats(
         rec.append(
             f"compact: {tombstone_frac:.1%} of ids are tombstoned — every "
             "query pays the anti-join; rewrite the live set "
-            f"(compact_{family}_index)"
+            "(compact_index)"
         )
     if float(row.files_per_part or 0) >= files_per_part_warn:
         rec.append(
@@ -2766,11 +2440,11 @@ def index_stats(
     mean_rows = float(row.rows_mean or 0.0)
     if mean_rows >= occupancy_warn * target:
         rebuild_hint = {
-            "ivf": "cell count; rebuild_ivf_index(n_centroids='auto')",
-            "ivfpq": "cell count; rebuild_ivfpq_index(source_df) — "
+            "ivf": "cell count; rebuild_index(n_centroids='auto')",
+            "ivfpq": "cell count; rebuild_index(corpus=source_df) — "
             "codes cannot retrain, so the source embeddings are "
             "required",
-            "lsh": "bit count; rebuild_lsh_index(n_planes='auto')",
+            "lsh": "bit count; rebuild_index(n_planes='auto')",
         }[family]
         rec.append(
             f"retrain: mean partition holds {mean_rows:.0f} rows vs the "
@@ -2781,18 +2455,18 @@ def index_stats(
     if family == "lsh":
         conf = _read_conf(pins["conf"])
         advisor = multiprobe_advisor(
-            int(conf.n_planes), int(conf.n_tables),
+            int(conf["n_planes"]), int(conf["n_tables"]),
             recall_target=recall_target,
         )
         if advisor["deficit"] > 0:
             cur, pick = advisor["current"], advisor["pick"]
             if recall_target is not None and pick["measured"]:
-                # r12 (the r11 verdict's item 5): the advisor's priced
-                # pick becomes a NAMED maintenance action with its
-                # cost multipliers attached — maintain_index surfaces
-                # this verbatim (rebuilds stay operator-applied)
+                # the advisor's priced pick as a NAMED maintenance
+                # action with its cost multipliers attached —
+                # maintain_index surfaces it verbatim (rebuilds stay
+                # operator-applied)
                 rec.append(
-                    f"recall-rebuild: rebuild_lsh_index(n_tables="
+                    f"recall-rebuild: rebuild_index(n_tables="
                     f"{pick['n_tables']}) then serve with n_multiprobe="
                     f"{pick['flips']} reaches measured recall"
                     f"≈{pick['recall']} at the {recall_target} target "
@@ -2804,7 +2478,7 @@ def index_stats(
                 rec.append(
                     f"recall: stored geometry is {advisor['deficit']} "
                     "table-doubling(s) short of the "
-                    f"{int(conf.n_planes)}-bit rule — serve with "
+                    f"{int(conf['n_planes'])}-bit rule — serve with "
                     f"n_multiprobe={cur.get('flips')} (candidate reads "
                     f"×{1 << int(cur.get('flips', 0))}, store ×1) or "
                     f"rebuild with n_tables={pick['n_tables']} (store "
@@ -2836,11 +2510,10 @@ def maintain_index(
 ) -> dict:
     """The scheduled-maintenance one-shot: run ``index_stats`` and
     APPLY every compact-class recommendation (tombstone debt, append
-    fragmentation, LSH cap drift) with the family's compactor, then
+    fragmentation, LSH cap drift) with ``compact_index``, then
     re-measure. Retrain-class recommendations are REPORTED but never
-    auto-applied — retraining changes served results, so it stays a
-    deliberate operator action (``rebuild_{ivf,lsh}_index``, or a
-    re-save for IVF-PQ whose codes cannot retrain).
+    auto-applied — retraining changes served results, so
+    ``rebuild_index`` stays a deliberate operator action.
 
     Returns {"family", "before", "actions", "after"}: the stats rows
     either side and the action strings executed. A healthy index is a
@@ -2855,12 +2528,8 @@ def maintain_index(
     before = index_stats(spark, path, **stat_thresholds)
     actions: list[str] = []
     if any(r.startswith("compact:") for r in before["recommendations"]):
-        if before["family"] == "lsh":
-            compact_lsh_index(spark, path)
-            actions.append("compact_lsh_index")
-        else:  # ivf and ivfpq share the layout-agnostic compactor
-            compact_ivf_index(spark, path)
-            actions.append("compact_ivf_index")
+        compact_index(spark, path)
+        actions.append("compact_index")
     after = index_stats(spark, path, **stat_thresholds) if actions else before
     return {
         "family": before["family"],
@@ -2868,217 +2537,3 @@ def maintain_index(
         "actions": actions,
         "after": after,
     }
-
-
-def rebuild_ivf_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    corpus: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int | str | None = None,
-    n_iters: int = 5,
-    max_train: int = 4096,
-) -> None:
-    """RETRAIN an IVF index in place — the action ``index_stats``'s
-    skew recommendation points at. ``append_to_ivf_index`` keeps
-    centroids fixed by contract, so under real distribution drift the
-    hottest list grows unboundedly and probing degrades; the fix is a
-    periodic retrain on the CURRENT live corpus and a refile of every
-    vector under the new centroids, which this performs with the same
-    deterministic training path as the original build.
-
-    Corpus source: pass ``corpus`` (id, vec) to rebuild from the
-    source of truth — the right choice when the index is quantized,
-    since the only alternative is training on dequantized vectors
-    (error ≤ scale/2 per component, which this does, documented, when
-    ``corpus`` is omitted). Tombstoned ids are excluded either way and
-    the tombstone dir is dropped after the rewrite (the rebuild IS a
-    compaction). ``n_centroids`` defaults to the stored list count.
-
-    Both subdirectories are rewritten via ``atomic_swap_write``
-    (readers of EACH see old or new, never a mix), lists first, then
-    centroids. The cross-directory window is not atomic: a crash
-    between the two swaps leaves new lists under old centroids —
-    detectable (probe quality collapses) and HEALABLE by re-running
-    rebuild, because the lists always hold the full live vector set
-    regardless of how they are partitioned. A zero-downtime
-    alternative at cluster scale is building a fresh directory and
-    flipping a path pointer; this in-place form exists for the
-    single-writer maintenance schedule the CLI drives.
-
-    ``n_centroids="auto"`` re-sizes the list count to the LIVE corpus
-    (``adaptive_centroids``) — the growth half of the retrain story:
-    a corpus that outgrew its build-time cell count gets proportional
-    cells back, restoring bounded occupancy (``index_stats`` flags
-    this as its occupancy recommendation)."""
-    stored = spark.read.parquet(_pin(f"{path}/lists"))
-    was_q = "qvec" in stored.columns
-    if n_centroids is None:
-        n_centroids = read_metadata(_pin(f"{path}/centroids")).num_rows
-    if corpus is None:
-        # preserve the STORED id column name: renaming it to the
-        # id_col default would fork the index schema for any index
-        # built with a non-default id, silently breaking later
-        # appends/tombstones against the same directory
-        sid = _index_id_col(stored, ("list_id", "qvec", "scale"))
-        id_col = sid
-        live = _apply_tombstones(stored, path, sid)
-        if was_q:
-            corpus = dequantize_embeddings(live, id_col=sid, out_col=vec_col)
-        else:
-            # detect the stored vector column too (same rationale as
-            # sid): an index saved with a custom vec_col must rebuild
-            # without the caller re-supplying the name
-            vec_col = _index_vec_col(stored, ("list_id",))
-            corpus = live.select(F.col(sid), F.col(vec_col))
-    else:
-        corpus = corpus.select(id_col, vec_col)
-        tomb = _tombstone_df(spark, path)
-        if tomb is not None:
-            corpus = corpus.join(
-                tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-            )
-
-    cents = train_ivf_centroids(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=_resolve_centroids(corpus, n_centroids, cap=max_train),
-        n_iters=n_iters,
-        max_train=max_train,
-    )
-    home = (
-        ivf_assign(corpus, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    if was_q:
-        home = quantize_embeddings(
-            home, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",)
-        )
-    if _ivf_list_dirs(path):
-        _swap_rewrite(home, f"{path}/lists", ["list_id"])
-    else:
-        _swap_rewrite(
-            home.repartition("list_id"), f"{path}/lists", [],
-            sort_cols=["list_id"],
-        )
-    write_metadata(f"{path}/centroids", _centroid_table(cents))
-    import pathlib
-    import shutil
-
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)
-
-
-def rebuild_lsh_index(
-    spark: SparkSession,
-    path: str,
-    *,
-    corpus: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int | str | None = None,
-    n_tables: int | str | None = None,
-    max_bucket: int | None = None,
-) -> None:
-    """Rebuild an LSH index in place — the LSH mirror of
-    ``rebuild_ivf_index``, closing the one asymmetry in the
-    maintenance story: ``compact_lsh_index`` restores the build-once
-    global cap but cannot CHANGE the index geometry, and re-tuning
-    ``n_tables``/``n_planes``/``max_bucket`` (recall dial vs storage)
-    previously meant a manual ``save_lsh_index`` over the live set
-    plus a directory swap. This wraps exactly that: derive the live
-    vector set (stored memberships deduped by id, tombstones applied),
-    re-bucket it under the NEW conf — hyperplanes are md5-derived from
-    the conf, never stored, so a conf change IS a plane change — and
-    atomic-swap both subdirectories. Omitted config fields keep their
-    stored values, the stored id/vector column names are preserved
-    (detected like ``_index_id_col``), and a quantized index stays
-    quantized (re-bucketing runs on the dequantized vectors, error ≤
-    scale/2 per component — pass ``corpus`` to rebuild from the source
-    of truth instead; tombstoned ids are excluded either way).
-
-    Rebuild == ``save_lsh_index(live_set, **new_conf)`` bit for bit
-    (pinned by test), where live_set is the set of vectors the stored
-    index still carries: a hot-bucket cap drops its overflow at WRITE
-    time, so a vector capped out of every table is gone from the index
-    and no later rebuild can resurrect it (the documented recall
-    trade of capping; rebuild from ``corpus`` to re-file dropped
-    vectors). Buckets swap first, then conf: the
-    cross-directory crash window (new buckets under the old conf's
-    planes) degrades recall but is HEALED by re-running rebuild — the
-    bucket rows always carry the full live vector set regardless of
-    how they are bucketed. The tombstone dir is dropped at the end
-    (the rebuild is also a compaction)."""
-    conf = _read_conf(_pin(f"{path}/conf"))
-    n_planes = conf.n_planes if n_planes is None else n_planes
-    n_tables = conf.n_tables if n_tables is None else n_tables
-    max_bucket = conf.max_bucket if max_bucket is None else max_bucket
-    stored = spark.read.parquet(_pin(f"{path}/buckets"))
-    was_q = "qvec" in stored.columns
-    if corpus is None:
-        sid = _index_id_col(stored, ("table_idx", "bucket", "qvec", "scale"))
-        id_col = sid
-        # an LSH index stores up to n_tables copies of each vector —
-        # collapse to one per id before re-bucketing (copies are
-        # identical payloads, so any survivor is THE vector)
-        live = _apply_tombstones(stored, path, sid).dropDuplicates([sid])
-        if was_q:
-            corpus = dequantize_embeddings(live, id_col=sid, out_col=vec_col)
-        else:
-            vec_col = _index_vec_col(stored, ("table_idx", "bucket"))
-            corpus = live.select(F.col(sid), F.col(vec_col))
-    else:
-        corpus = corpus.select(id_col, vec_col)
-        tomb = _tombstone_df(spark, path)
-        if tomb is not None:
-            corpus = corpus.join(
-                tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-            )
-    corpus = corpus.persist()
-    # "auto": re-size the bit/table counts to the LIVE corpus (growth
-    # story — same rules as save_lsh_index; the new conf row stores
-    # the results)
-    n_planes = _resolve_planes(corpus, n_planes)
-    n_tables = _resolve_tables(n_planes, n_tables)
-    capped = capped_lsh_buckets(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        dim=conf.dim,
-        max_bucket=max_bucket,
-    )
-    new_stored = capped.join(corpus, id_col)
-    if was_q:
-        new_stored = quantize_embeddings(
-            new_stored, id_col=id_col, vec_col=vec_col,
-            keep_cols=("table_idx", "bucket"),
-        )
-    bucket_dirs = _lsh_bucket_dirs(conf)
-    if bucket_dirs:
-        _swap_rewrite(new_stored, f"{path}/buckets", ["table_idx", "bucket"])
-    else:
-        _swap_rewrite(
-            new_stored, f"{path}/buckets", ["table_idx"],
-            sort_cols=["table_idx", "bucket"],
-        )
-    write_metadata(
-        f"{path}/conf",
-        _conf_table(
-            n_planes=n_planes, n_tables=n_tables, dim=conf.dim,
-            max_bucket=max_bucket, bucket_dirs=bucket_dirs,
-        ),
-    )
-    corpus.unpersist()
-    import pathlib
-    import shutil
-
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)

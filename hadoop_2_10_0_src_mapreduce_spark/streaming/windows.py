@@ -617,89 +617,68 @@ def stream_index_vectors(
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """CONTINUOUS ANN INDEXING — the streaming face of
-    ``similarity.append_to_ivf_index``, completing the serving story:
-    build the IVF index offline once (``save_ivf_index`` — the
-    centroids define the filing function, so the index MUST already
-    exist at ``index_path``), then let this stream fold every new
-    embedding batch in while ``query_ivf_index`` keeps serving reads
-    against the same directory.
+    ``index_store.append_to_index``, completing the serving story:
+    build the index offline once (``save_ivf_index``,
+    ``save_lsh_index`` or ``save_ivfpq_index`` — its metadata define
+    the filing function, so the index MUST already exist at
+    ``index_path``; the family is detected from it), then let this
+    stream fold every new embedding batch in while the family's
+    ``query_*_index`` keeps serving reads against the same directory.
 
     Per micro-batch: in-batch id dedup, then the same shuffle-free
     membership test as the streaming corpus dedup
-    (``dedup.filter_novel_fps`` keyed on the id — the index side is
+    (``dedup.filter_novel_fps`` keyed on the id — the row store is
     scanned column-pruned to ids only and NEVER enters an exchange),
-    then ``append_to_ivf_index`` files only the novel vectors under
-    the fixed centroids. The novel set is eagerly checkpointed
+    then ``append_to_index`` files only the novel vectors under the
+    fixed metadata. The novel set is eagerly checkpointed
     (``localCheckpoint`` by default; reliable parquet pin when
     ``pin_dir`` is set — same cleanup contract as the corpus-dedup
-    stream) before the append for the same read-before-append lineage race the
-    corpus dedup documents. Ids are the identity: a vector id seen in
-    any earlier batch (or the offline build) is dropped, which makes
-    replays idempotent — at-least-once foreachBatch re-runs find
+    stream) before the append for the same read-before-append lineage
+    race the corpus dedup documents. Ids are the identity: a vector id
+    seen in any earlier batch (or the offline build) is dropped, which
+    makes replays idempotent — at-least-once foreachBatch re-runs find
     nothing novel. To UPDATE a vector, tombstone it out of band
     (``delete_from_index``) and let the next batch re-add it.
 
-    ``compact_every=N`` runs ``compact_ivf_index`` after every Nth
-    batch (foreachBatch is sequential, so the atomic swap cannot race
-    a concurrent append from this stream): append debt and tombstones
+    ``compact_every=N`` runs ``compact_index`` after every Nth batch
+    (foreachBatch is sequential, so the atomic swap cannot race a
+    concurrent append from this stream): append debt and tombstones
     are folded in on a cadence instead of by a separate scheduler.
     Monitor with ``index_stats`` either way. Appends inherit the
     stored-vector-type cast, so a double-typed JSON stream lands
-    correctly in a float-built index.
-
-    The family is AUTO-DETECTED from the directory layout (a
-    ``codebooks`` subdir marks IVF-PQ): an IVF-PQ target streams
-    through the identical novel-id filter and appends CODES under the
-    fixed centroids AND codebooks (``append_to_ivfpq_index`` — same
-    fixed-filing contract), with compaction routed to the shared
-    layout-agnostic compactor."""
-    import pathlib
-
-    from pyspark.errors import AnalysisException
-
+    correctly in a float-built index."""
     from hadoop_2_10_0_src_mapreduce_spark.checkpointing import (
         RoundCheckpointer,
     )
     from hadoop_2_10_0_src_mapreduce_spark.operators.dedup import (
         filter_novel_fps,
     )
-    from hadoop_2_10_0_src_mapreduce_spark.operators.pq import (
-        append_to_ivfpq_index,
-    )
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
+    from hadoop_2_10_0_src_mapreduce_spark.operators.index_store import (
         _index_id_col,
-        append_to_ivf_index,
-        compact_ivf_index,
+        append_to_index,
+        compact_index,
+        index_codec,
+    )
+    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
+        pin_generation,
     )
 
-    is_pq = (pathlib.Path(index_path) / "codebooks").exists()
+    codec = index_codec(index_path)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
-        from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-            pin_generation,
-        )
-
-        try:
-            stored = s.read.parquet(pin_generation(f"{index_path}/lists"))
-        except AnalysisException as e:
-            raise ValueError(
-                f"stream_index_vectors needs an existing IVF/IVF-PQ index "
-                f"at {index_path} (save_ivf_index / save_ivfpq_index builds "
-                "one; the centroids define where appended vectors are filed)"
-            ) from e
-        sid = _index_id_col(stored, ("list_id", "qvec", "scale"))
+        stored = s.read.parquet(pin_generation(f"{index_path}/{codec.rows}"))
+        sid = _index_id_col(stored, codec.layout + ("qvec", "scale"))
         seen = stored.select(F.col(sid).alias(id_col))
         pin = RoundCheckpointer(
             s, f"{pin_dir}/batch-{batch_id}" if pin_dir else None
         )
         novel = pin(filter_novel_fps(batch, seen, fp_col=id_col))
         if novel.take(1):
-            append = append_to_ivfpq_index if is_pq else append_to_ivf_index
-            append(novel, index_path, id_col=id_col, vec_col=vec_col)
+            append_to_index(novel, index_path, id_col=id_col, vec_col=vec_col)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_ivf_index(s, index_path)
+            compact_index(s, index_path)
         pin.close()  # append landed (or nothing was novel)
 
     reader = spark.readStream.schema(schema)

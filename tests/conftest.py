@@ -33,50 +33,30 @@ def duck():
     return con
 
 
-# --- slow-marker list (r13) ---------------------------------------------
-# The driver's verify window could not finish the full 43-minute suite
-# (r12 VERIFY cut off at ~47%, zero failures). These are the measured
-# ≥21 s integration/lifecycle tests (pytest --durations, r13 round
-# start): together 1588 s of the 2617 s total. They are marked `slow`
-# here (one auditable list instead of 40 scattered decorators) and
-# deselected by default via pytest.ini addopts; `-m slow` runs them,
-# `-m ""` runs everything. Coverage note: every operator these tests
-# exercise also has fast unit tests that remain in the default run.
+# --- slow-marker list ---------------------------------------------------
+# Integration tests of ≥20 s each (pytest --durations), marked `slow`
+# here (one auditable list instead of scattered decorators) and
+# deselected by default via pytest.ini addopts so the default run fits
+# its time window; `-m slow` runs them, `-m ""` runs everything. Every
+# operator these tests exercise also has fast tests in the default run
+# (the index lifecycle: tests/test_index_lifecycle.py).
 _SLOW = {
-    "test_extensions.py::test_auto_geometry_through_the_index_lifecycle",
     "test_extensions.py::test_compact_table_cluster_with_partition_dirs",
     "test_extensions.py::test_components_resume_after_driver_loss",
     "test_extensions.py::test_edge_cases_empty_batches_and_queries",
     "test_extensions.py::test_embedding_near_dup_clusters_compose",
-    "test_extensions.py::test_index_append_detects_quantized_layout",
-    "test_extensions.py::test_ivf_flat_lists_layout_serves_identically",
-    "test_extensions.py::test_ivf_index_append_equals_rebuild_and_deletes",
-    "test_extensions.py::test_ivf_index_roundtrip_serves_identically",
-    "test_extensions.py::test_lsh_flat_bucket_layout_serves_identically",
-    "test_extensions.py::test_lsh_index_append_compact_equals_build_once",
-    "test_extensions.py::test_lsh_index_roundtrip_serves_identically",
-    "test_extensions.py::test_maintain_index_applies_compact_recs_and_reports_retrain",
     "test_extensions.py::test_prepare_training_corpus_decontam_and_split",
     "test_extensions.py::test_prepare_training_corpus_repetition_gate_and_redaction",
     "test_extensions.py::test_quantized_ivf_index_smaller_and_recalls",
     "test_extensions.py::test_query_lsh_index_multiprobe_dominance_and_default",
-    "test_extensions.py::test_rebuild_ivf_index_equals_fresh_build_and_heals_drift",
-    "test_extensions.py::test_rebuild_lsh_index_equals_fresh_build_and_retunes_conf",
     "test_extensions.py::test_recall_target_wires_advisor_pick_into_maintenance",
     "test_extensions.py::test_recipe_chain_resume_at_each_boundary",
     "test_extensions.py::test_recipe_df_cap_would_blind_mega_cluster",
     "test_extensions.py::test_recipe_reliable_mode_retires_components_step",
     "test_extensions.py::test_training_prep_last_mile_composes",
-    "test_multimodal_streaming.py::test_stream_index_vectors_into_ivfpq",
     "test_pq.py::test_auto_layout_resolves_from_list_count",
     "test_pq.py::test_auto_probe_clamps_on_tiny_corpus",
-    "test_pq.py::test_ivfpq_append_equals_rebuild_and_tombstones_vanish",
-    "test_pq.py::test_ivfpq_flat_lists_layout",
     "test_pq.py::test_packed_codes_equal_unpacked",
-    "test_pq.py::test_rebuild_heals_crash_inside_swap_window",
-    "test_pq.py::test_rebuild_ivfpq_preserves_conf_and_compacts",
-    "test_pq.py::test_rebuild_keeps_pointer_mode_serving",
-    "test_pq.py::test_residual_append_equals_fresh_and_conf_backcompat",
     "test_pq.py::test_residual_reconstruction_beats_plain_on_clusters",
     "test_pq.py::test_residual_served_matches_brute_force_when_codes_saturate",
     "test_pq.py::test_text_to_ivfpq_serving_composition",

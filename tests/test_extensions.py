@@ -948,48 +948,6 @@ def test_incremental_minhash_lsh_equals_full_run(spark, dup_corpus):
     assert within_existing | incr == full
 
 
-def test_ivf_index_roundtrip_serves_identically(spark, tmp_path):
-    """save_ivf_index → query_ivf_index must equal in-session
-    external-query mode bit for bit (same deterministic training,
-    same probes, same block scoring), and the probed-lists scan must
-    partition-prune: the lists table is partitioned by list_id and the
-    probe set becomes a literal partition filter, so unprobed list
-    directories are never read."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 10).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    path = str(tmp_path / "ivf_index")
-    similarity.save_ivf_index(emb, path, n_centroids=8)
-    served = similarity.query_ivf_index(
-        queries, path, k=5, n_probe=2
-    )
-    in_session = similarity.ann_ivf_topk(
-        emb, queries=queries, k=5, n_centroids=8, n_probe=2
-    )
-    as_rows = lambda df: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim) for r in df.collect()
-    )
-    assert as_rows(served) == as_rows(in_session)
-    assert as_rows(served), "serving returned no rows"
-
-    # partition pruning: the parquet scan of <path>/lists carries a
-    # PartitionFilters entry on list_id (directory-level skip)
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        served.explain("formatted")
-    plan = buf.getvalue()
-    scan_lines = [
-        line
-        for line in plan.splitlines()
-        if "PartitionFilters" in line and "list_id" in line
-    ]
-    assert scan_lines, f"lists scan did not partition-prune:\n{plan[:2000]}"
-
-
 def test_redact_pii_and_counts(spark):
     rows = [
         (1, "mail me at john.doe+x@example.co.uk today"),
@@ -1561,48 +1519,6 @@ def test_prepare_training_corpus_decontam_and_split(spark):
     assert labels <= {"train", "val"} and "train" in labels
 
 
-def test_lsh_index_roundtrip_serves_identically(spark, tmp_path):
-    """save_lsh_index → query_lsh_index with the corpus as the query
-    batch equals in-session self-ANN (no bucket hits the cap at this
-    scale, so candidates coincide), and the buckets scan
-    partition-prunes on (table_idx, bucket). The int8-quantized index
-    serves with high overlap against the float index."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    path = str(tmp_path / "lsh_index")
-    similarity.save_lsh_index(emb, path, n_planes=6, n_tables=8)
-    served = similarity.query_lsh_index(emb, path, k=5)
-    in_session = similarity.ann_lsh_topk(emb, k=5, n_planes=6, n_tables=8)
-    as_rows = lambda df: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim) for r in df.collect()
-    )
-    assert as_rows(served) == as_rows(in_session)
-    assert as_rows(served), "serving returned no rows"
-
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        served.explain("formatted")
-    plan = buf.getvalue()
-    assert any(
-        "PartitionFilters" in line and "table_idx" in line
-        for line in plan.splitlines()
-    ), f"buckets scan did not partition-prune:\n{plan[:2000]}"
-
-    # quantized index: same top-1 neighbor for most queries (int8
-    # rounding can reorder near-ties further down the list)
-    qpath = str(tmp_path / "lsh_index_q")
-    similarity.save_lsh_index(emb, qpath, n_planes=6, n_tables=8, quantize=True)
-    qserved = similarity.query_lsh_index(emb, qpath, k=1)
-    top1 = {r.query_id: r.neighbor_id for r in served.collect() if r.rnk == 1}
-    qtop1 = {r.query_id: r.neighbor_id for r in qserved.collect()}
-    agree = sum(1 for q, n in top1.items() if qtop1.get(q) == n)
-    assert agree / len(top1) > 0.8
-
-
 def test_build_side_multiprobe_dominance_and_default(spark):
     """r10: the multi-probe recall dial extended from the serve path
     to the BUILD-side paths. (a) ``ann_lsh_topk`` auto resolves to 0
@@ -1981,100 +1897,6 @@ def test_repeated_ngram_spans_merge_islands(spark):
     assert stats == {1: (1, 3), 2: (3, 3)}
 
 
-def test_ivf_index_append_equals_rebuild_and_deletes(spark, tmp_path):
-    """The maintenance lifecycle: (a) append_to_ivf_index folds a new
-    batch in WITHOUT retraining — served results equal a rebuild that
-    trains on the ORIGINAL corpus and files the union (train_df=);
-    (b) delete_from_index tombstones ids out of results immediately;
-    (c) compact_ivf_index physically applies tombstones (dir removed,
-    results unchanged)."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    original = emb.where(F.col("vec_id") % 3 != 0)
-    batch = emb.where(F.col("vec_id") % 3 == 0)
-    queries = emb.where(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    as_rows = lambda df: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim) for r in df.collect()
-    )
-
-    p_incr = str(tmp_path / "ivf_incr")
-    similarity.save_ivf_index(original, p_incr, n_centroids=8)
-    similarity.append_to_ivf_index(batch, p_incr)
-    p_rebuild = str(tmp_path / "ivf_rebuild")
-    similarity.save_ivf_index(
-        emb, p_rebuild, n_centroids=8, train_df=original
-    )
-    served_incr = as_rows(similarity.query_ivf_index(queries, p_incr, k=5, n_probe=2))
-    served_rebuild = as_rows(similarity.query_ivf_index(queries, p_rebuild, k=5, n_probe=2))
-    assert served_incr and served_incr == served_rebuild
-
-    # delete: tombstoned ids vanish from results without a rewrite
-    victims = [r.neighbor_id for r in
-               similarity.query_ivf_index(queries, p_incr, k=5, n_probe=2)
-               .select("neighbor_id").distinct().limit(3).collect()]
-    similarity.delete_from_index(spark, p_incr, victims)
-    after_del = similarity.query_ivf_index(queries, p_incr, k=5, n_probe=2)
-    got_ids = {r.neighbor_id for r in after_del.collect()}
-    assert got_ids and not (got_ids & set(victims))
-
-    # compact: tombstones physically applied, results identical
-    import pathlib
-    before = as_rows(after_del)
-    similarity.compact_ivf_index(spark, p_incr)
-    assert not (pathlib.Path(p_incr) / "tombstones").exists()
-    assert as_rows(similarity.query_ivf_index(queries, p_incr, k=5, n_probe=2)) == before
-
-
-def test_lsh_index_append_compact_equals_build_once(spark, tmp_path):
-    """LSH twin: per-batch caps on append can only overfill buckets;
-    compact_lsh_index's global md5-order re-cap restores EXACTLY the
-    build-once index on the union (keeper-set argument), and
-    tombstoned ids drop out of served results then disappear
-    physically at compaction."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    original = emb.where(F.col("vec_id") % 3 != 0)
-    batch = emb.where(F.col("vec_id") % 3 == 0)
-    queries = emb.where(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    as_rows = lambda df: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim) for r in df.collect()
-    )
-    # tiny max_bucket so batch-local caps really overfill buckets and
-    # the global re-cap has work to do
-    p_incr = str(tmp_path / "lsh_incr")
-    similarity.save_lsh_index(original, p_incr, n_planes=4, n_tables=4, max_bucket=12)
-    similarity.append_to_lsh_index(batch, p_incr)
-    similarity.compact_lsh_index(spark, p_incr)
-    p_once = str(tmp_path / "lsh_once")
-    similarity.save_lsh_index(emb, p_once, n_planes=4, n_tables=4, max_bucket=12)
-    a, b = as_rows(similarity.query_lsh_index(queries, p_incr, k=5)), as_rows(
-        similarity.query_lsh_index(queries, p_once, k=5)
-    )
-    assert a and a == b
-    # stored memberships match row-for-row too (the stronger claim)
-    key = lambda p: sorted(
-        (r.table_idx, r.bucket, r.vec_id)
-        for r in spark.read.parquet(f"{p}/buckets").collect()
-    )
-    assert key(p_incr) == key(p_once)
-
-    # delete + compact on the LSH layout
-    victims = [r.neighbor_id for r in
-               similarity.query_lsh_index(queries, p_incr, k=5)
-               .select("neighbor_id").distinct().limit(3).collect()]
-    similarity.delete_from_index(spark, p_incr, victims)
-    after = similarity.query_lsh_index(queries, p_incr, k=5)
-    got_ids = {r.neighbor_id for r in after.collect()}
-    assert got_ids and not (got_ids & set(victims))
-    import pathlib
-    before = as_rows(after)
-    similarity.compact_lsh_index(spark, p_incr)
-    assert not (pathlib.Path(p_incr) / "tombstones").exists()
-    assert as_rows(similarity.query_lsh_index(queries, p_incr, k=5)) == before
-
-
 def test_assign_packing_bins_guard_and_auto_shard(spark):
     """Round-5 footgun fixes: the unsharded packing path refuses to
     funnel a large corpus through one window task (size guard), and
@@ -2310,38 +2132,6 @@ def test_drop_boilerplate_lines(spark):
     assert out4[0].count("\n") == 4
 
 
-def test_index_append_detects_quantized_layout(spark, tmp_path):
-    """Appending to a QUANTIZED index must quantize the batch (layout
-    detected from the stored schema, not caller flags): stored rows
-    keep the qvec/scale shape and serving still works across the
-    append for both families."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    original = emb.where(F.col("vec_id") % 3 != 0)
-    batch = emb.where(F.col("vec_id") % 3 == 0)
-    queries = emb.where(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-
-    p_ivf = str(tmp_path / "ivf_q")
-    similarity.save_ivf_index(original, p_ivf, n_centroids=8, quantize=True)
-    similarity.append_to_ivf_index(batch, p_ivf)
-    stored = spark.read.parquet(f"{p_ivf}/lists")
-    assert {"qvec", "scale"} <= set(stored.columns)
-    assert stored.count() == emb.count()
-    got = similarity.query_ivf_index(queries, p_ivf, k=3, n_probe=2).collect()
-    assert got and all(r.sim <= 1.000001 for r in got)
-
-    p_lsh = str(tmp_path / "lsh_q")
-    similarity.save_lsh_index(
-        original, p_lsh, n_planes=4, n_tables=4, quantize=True
-    )
-    similarity.append_to_lsh_index(batch, p_lsh)
-    bstored = spark.read.parquet(f"{p_lsh}/buckets")
-    assert {"qvec", "scale"} <= set(bstored.columns)
-    got = similarity.query_lsh_index(queries, p_lsh, k=3).collect()
-    assert got and all(r.sim <= 1.000001 for r in got)
-
-
 def test_round5_ops_empty_and_boundary_edges(spark, tmp_path):
     """Boundary edges of the round-5 additions: no-overlap
     contamination report is empty; boilerplate removal on a single doc
@@ -2401,7 +2191,7 @@ def test_compact_refuses_to_brick_a_fully_tombstoned_index(spark, tmp_path):
         spark, p, [r.vec_id for r in emb.select("vec_id").collect()]
     )
     with pytest.raises(ValueError, match="EMPTY"):
-        similarity.compact_ivf_index(spark, p)
+        similarity.compact_index(spark, p)
     # refusal left the live directory intact and readable
     assert spark.read.parquet(f"{p}/lists").count() == 20
 
@@ -2554,7 +2344,7 @@ def test_index_stats_reports_health_and_maintenance_triggers(spark, tmp_path):
     assert s2["tombstone_frac"] > 0.1
     assert any(r.startswith("compact:") for r in s2["recommendations"])
 
-    similarity.compact_ivf_index(spark, path)
+    similarity.compact_index(spark, path)
     s3 = similarity.index_stats(spark, path)
     assert s3["rows_live"] == 420 and s3["n_tombstones"] == 0
     assert not any("tombston" in r for r in s3["recommendations"])
@@ -2574,70 +2364,14 @@ def test_index_stats_reports_health_and_maintenance_triggers(spark, tmp_path):
     assert not any("outgrew" in r for r in s3["recommendations"])
     tight_ivf = similarity.index_stats(spark, path, occupancy_warn=0.01)
     assert any(
-        "rebuild_ivf_index(n_centroids='auto')" in r
+        "rebuild_index(n_centroids='auto')" in r
         for r in tight_ivf["recommendations"]
     )
     tight_lsh = similarity.index_stats(spark, lsh_path, occupancy_warn=0.01)
     assert any(
-        "rebuild_lsh_index(n_planes='auto')" in r
+        "rebuild_index(n_planes='auto')" in r
         for r in tight_lsh["recommendations"]
     )
-
-
-def test_rebuild_ivf_index_equals_fresh_build_and_heals_drift(spark, tmp_path):
-    """rebuild_ivf_index == save_ivf_index built fresh over the same
-    live corpus (same deterministic training ⇒ identical centroids and
-    identical served results), excludes tombstoned ids, drops the
-    tombstone dir, and re-spreads a drifted corpus that append (fixed
-    centroids by contract) piled into one list."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    old = emb.where(F.col("vec_id") < 250)
-    path = str(tmp_path / "ivf_drift")
-    similarity.save_ivf_index(old, path, n_centroids=8)
-
-    # drift: a tight cluster far outside the training data, appended
-    drift = emb.where(F.col("vec_id") >= 250).select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: x * F.lit(0.5) + F.lit(10.0)
-        ).cast("array<float>").alias("embedding"),
-    )
-    similarity.append_to_ivf_index(drift, path)
-    s_before = similarity.index_stats(spark, path)
-    assert any(r.startswith("retrain:") for r in s_before["recommendations"])
-
-    similarity.delete_from_index(spark, path, [0, 1])
-    similarity.rebuild_ivf_index(spark, path)
-
-    s_after = similarity.index_stats(spark, path)
-    assert s_after["rows_live"] == 498 and s_after["n_tombstones"] == 0
-    assert s_after["skew"] < s_before["skew"]
-    # the drift blob IS one genuine cluster, so a retrain advisory may
-    # legitimately remain; what rebuild must clear is the maintenance
-    # debt: tombstones gone, and the clustered rewrite leaves ONE file
-    # set per list directory
-    assert not any(r.startswith("compact:") for r in s_after["recommendations"])
-    assert s_after["files_per_part"] <= 1.0
-
-    # equivalence: a fresh build over the identical live corpus serves
-    # bit-for-bit the same results
-    live = (
-        old.select("vec_id", "embedding")
-        .where(~F.col("vec_id").isin(0, 1))
-        .unionByName(drift)
-    )
-    fresh = str(tmp_path / "ivf_fresh")
-    similarity.save_ivf_index(live, fresh, n_centroids=8)
-    queries = emb.where(F.col("vec_id") < 6).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    a = similarity.query_ivf_index(queries, path, k=5, n_probe=3)
-    b = similarity.query_ivf_index(queries, fresh, k=5, n_probe=3)
-    rows = lambda df: sorted(map(tuple, df.collect()))
-    assert rows(a) == rows(b)
-    ca = spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-    cb = spark.read.parquet(f"{fresh}/centroids").orderBy("list_id").collect()
-    assert [tuple(r.centroid) for r in ca] == [tuple(r.centroid) for r in cb]
 
 
 def test_split_corpus_by_components_moves_clusters_whole(spark):
@@ -2870,91 +2604,19 @@ def test_rebuild_preserves_nondefault_id_column(spark, tmp_path):
     similarity.save_ivf_index(
         emb, path, id_col="item_id", vec_col="vec", n_centroids=4
     )
-    similarity.rebuild_ivf_index(spark, path)
+    similarity.rebuild_index(spark, path)
     cols = spark.read.parquet(f"{path}/lists").columns
     assert "item_id" in cols and "vec_id" not in cols
     assert "vec" in cols and "embedding" not in cols
     # and the lifecycle keeps composing against the same directory
     similarity.delete_from_index(spark, path, [0], id_col="item_id")
-    similarity.compact_ivf_index(spark, path)
+    similarity.compact_index(spark, path)
     assert (
         spark.read.parquet(f"{path}/lists")
         .where(F.col("item_id") == 0)
         .count()
         == 0
     )
-
-
-def test_rebuild_lsh_index_equals_fresh_build_and_retunes_conf(spark, tmp_path):
-    """rebuild_lsh_index == save_lsh_index built fresh over the same
-    live set under the same conf (memberships row-for-row, served
-    results bit-for-bit), excludes tombstoned ids and drops the
-    tombstone dir, and a geometry change (n_tables/n_planes/
-    max_bucket) re-derives the md5 planes from the NEW conf — closing
-    the LSH/IVF maintenance asymmetry."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    original = emb.where(F.col("vec_id") % 3 != 0)
-    batch = emb.where((F.col("vec_id") % 3 == 0) & (F.col("vec_id") >= 6))
-    queries = emb.where(F.col("vec_id") < 8).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    as_rows = lambda df: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim) for r in df.collect()
-    )
-    members = lambda p: sorted(
-        (r.table_idx, r.bucket, r.vec_id)
-        for r in spark.read.parquet(f"{p}/buckets").collect()
-    )
-    # build UNcapped (max_bucket ≫ corpus) so the stored membership set
-    # carries every vector — a capped build permanently drops its cap
-    # losses, which rebuild-from-stored can then only preserve
-    path = str(tmp_path / "lsh_live")
-    similarity.save_lsh_index(
-        original, path, n_planes=4, n_tables=4, max_bucket=1024
-    )
-    similarity.append_to_lsh_index(batch, path)
-    similarity.delete_from_index(spark, path, [1, 2])
-
-    # retune: fewer planes, more tables, and a REAL cap this time
-    similarity.rebuild_lsh_index(
-        spark, path, n_planes=3, n_tables=6, max_bucket=24
-    )
-    import pathlib
-
-    assert not (pathlib.Path(path) / "tombstones").exists()
-    conf = spark.read.parquet(f"{path}/conf").collect()[0]
-    assert (conf.n_planes, conf.n_tables, conf.max_bucket) == (3, 6, 24)
-
-    live = original.unionByName(batch).where(~F.col("vec_id").isin(1, 2))
-    fresh = str(tmp_path / "lsh_fresh")
-    similarity.save_lsh_index(
-        live, fresh, n_planes=3, n_tables=6, max_bucket=24
-    )
-    assert members(path) == members(fresh)
-    a = as_rows(similarity.query_lsh_index(queries, path, k=5))
-    assert a and a == as_rows(similarity.query_lsh_index(queries, fresh, k=5))
-
-    # no-arg rebuild keeps the stored conf and stays a fixed point
-    before = members(path)
-    similarity.rebuild_lsh_index(spark, path)
-    conf2 = spark.read.parquet(f"{path}/conf").collect()[0]
-    assert (conf2.n_planes, conf2.n_tables, conf2.max_bucket) == (3, 6, 24)
-    assert members(path) == before
-
-    # nondefault id/vec column names survive a rebuild (detected from
-    # the stored schema, mirroring the IVF fix)
-    named = emb.select(
-        F.col("vec_id").alias("item_id"), F.col("embedding").alias("vec")
-    )
-    p_named = str(tmp_path / "lsh_named")
-    similarity.save_lsh_index(
-        named, p_named, id_col="item_id", vec_col="vec",
-        n_planes=3, n_tables=4, max_bucket=16,
-    )
-    similarity.rebuild_lsh_index(spark, p_named, n_tables=2)
-    cols = spark.read.parquet(f"{p_named}/buckets").columns
-    assert "item_id" in cols and "vec" in cols
-    assert "vec_id" not in cols and "embedding" not in cols
 
 
 def test_split_by_components_rejects_colliding_columns(spark):
@@ -3047,243 +2709,6 @@ def test_training_prep_last_mile_composes(spark, tmp_path):
     )
     back = spark.read.json(out)
     assert back.count() == len(rows)
-
-
-def test_auto_geometry_through_the_index_lifecycle(spark, tmp_path):
-    """The adaptive-geometry rule must reach the SERVING lifecycle,
-    not just the registered queries: 'auto' at build resolves through
-    the same formula (floor geometry at fixture sizes — bit-identical
-    to an explicit build), sizes PAST the floor once the corpus
-    outgrows it, persists the RESOLVED value in the LSH conf row so
-    appends/serving replay it, and rebuild with 'auto' re-sizes to
-    the LIVE corpus — the action index_stats' occupancy trigger
-    recommends."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    n = emb.count()  # 500 → floor geometry
-
-    # IVF: auto == explicit-floor build, served bit-for-bit equal
-    pa, pe = str(tmp_path / "ivf_auto"), str(tmp_path / "ivf_exp")
-    similarity.save_ivf_index(emb, pa, n_centroids="auto")
-    similarity.save_ivf_index(
-        emb, pe, n_centroids=similarity.adaptive_centroids(n)
-    )
-    assert (
-        spark.read.parquet(f"{pa}/centroids").count()
-        == similarity.adaptive_centroids(n)
-        == 16
-    )
-    queries = emb.where(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    rows = lambda p: sorted(  # noqa: E731
-        (r.query_id, r.rnk, r.neighbor_id, r.sim)
-        for r in similarity.query_ivf_index(queries, p, k=3).collect()
-    )
-    assert rows(pa) == rows(pe)
-
-    # LSH: conf row stores the RESOLVED bit count
-    la = str(tmp_path / "lsh_auto")
-    similarity.save_lsh_index(emb, la, n_planes="auto")
-    conf = spark.read.parquet(f"{la}/conf").collect()[0]
-    assert conf.n_planes == similarity.adaptive_planes(n) == 6
-
-    # growth: past the floor the cell count scales with the corpus...
-    emb = emb.select("vec_id", "embedding")
-    grown = emb.unionByName(
-        emb.sample(0.9, seed=7).select(
-            (F.col("vec_id") + 700000).alias("vec_id"), "embedding"
-        )
-    ).unionByName(
-        emb.sample(0.9, seed=11).select(
-            (F.col("vec_id") + 800000).alias("vec_id"), "embedding"
-        )
-    ).unionByName(
-        emb.sample(0.9, seed=13).select(
-            (F.col("vec_id") + 900000).alias("vec_id"), "embedding"
-        )
-    ).unionByName(
-        emb.sample(0.9, seed=17).select(
-            (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
-        )
-    )
-    n_grown = grown.count()
-    assert n_grown > 16 * 132, "growth fixture must exceed the cell floor"
-    pg = str(tmp_path / "ivf_grown")
-    similarity.save_ivf_index(grown, pg, n_centroids="auto")
-    assert (
-        spark.read.parquet(f"{pg}/centroids").count()
-        == similarity.adaptive_centroids(n_grown)
-        > 16
-    )
-
-    # ...and rebuild with 'auto' re-sizes to the LIVE corpus: after
-    # tombstoning enough rows to drop back under the floor threshold,
-    # the retrain shrinks the cell count to the floor again
-    doomed = [
-        r.vec_id
-        for r in grown.select("vec_id").orderBy("vec_id").collect()
-    ][: n_grown - 2000]
-    similarity.delete_from_index(spark, pg, doomed)
-    similarity.rebuild_ivf_index(spark, pg, n_centroids="auto")
-    assert spark.read.parquet(f"{pg}/centroids").count() == 16
-    assert spark.read.parquet(f"{pg}/lists").count() == 2000
-
-
-def test_maintain_index_applies_compact_recs_and_reports_retrain(spark, tmp_path):
-    """maintain_index is the idempotent cron one-shot: healthy index
-    -> no action; compact-class debt (tombstones/fragments) -> the
-    family compactor runs and the after-stats are clean; retrain-class
-    recommendations are reported, never auto-applied (retraining
-    changes served results)."""
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    path = str(tmp_path / "m_ivf")
-    similarity.save_ivf_index(emb.where(F.col("vec_id") < 400), path,
-                              n_centroids=8)
-
-    healthy = similarity.maintain_index(spark, path)
-    assert healthy["actions"] == []
-    assert healthy["before"] == healthy["after"]
-
-    similarity.append_to_ivf_index(emb.where(F.col("vec_id") >= 400), path)
-    similarity.delete_from_index(spark, path, list(range(80)))
-    ran = similarity.maintain_index(spark, path)
-    assert ran["actions"] == ["compact_ivf_index"]
-    assert ran["before"]["n_tombstones"] == 80
-    assert ran["after"]["n_tombstones"] == 0
-    assert ran["after"]["rows_live"] == 420
-    assert not any(
-        r.startswith("compact:") for r in ran["after"]["recommendations"]
-    )
-
-    # retrain-class only: occupancy trigger fires but nothing runs
-    tight = similarity.maintain_index(spark, path, occupancy_warn=0.01)
-    assert tight["actions"] == []
-    assert any("outgrew" in r for r in tight["before"]["recommendations"])
-
-    # ivfpq family routes to the shared layout-agnostic compactor
-    from hadoop_2_10_0_src_mapreduce_spark.operators import pq
-
-    pq_path = str(tmp_path / "m_pq")
-    pq.save_ivfpq_index(emb, pq_path, n_centroids=8, n_codes=64)
-    similarity.delete_from_index(spark, pq_path, list(range(100)))
-    ran_pq = similarity.maintain_index(spark, pq_path)
-    assert ran_pq["family"] == "ivfpq"
-    assert ran_pq["actions"] == ["compact_ivf_index"]
-    assert ran_pq["after"]["rows_live"] == 400
-
-    # lsh family routes to its own compactor (re-applies the global
-    # cap); LSH tombstone_frac counts ids against MEMBERSHIP rows
-    # (one id lives in up to n_tables partitions), so tighten the
-    # threshold rather than deleting most of the corpus
-    lsh_path = str(tmp_path / "m_lsh")
-    similarity.save_lsh_index(emb, lsh_path)
-    similarity.delete_from_index(spark, lsh_path, list(range(100)))
-    ran_lsh = similarity.maintain_index(spark, lsh_path, tombstone_warn=0.01)
-    assert ran_lsh["actions"] == ["compact_lsh_index"]
-    assert ran_lsh["after"]["n_tombstones"] == 0
-
-
-def test_lsh_flat_bucket_layout_serves_identically(spark, tmp_path):
-    """The default flat bucket layout (partition per table, rows
-    sorted by bucket) must serve bit-for-bit what the per-(table,
-    bucket) directory layout serves — it only changes WHERE the
-    probed-bucket skip happens (sorted parquet row-group stats vs
-    16·2^p directories, measured 13× at the sf1 fixture, SURVEY §8).
-    Appends and compaction follow the stored layout; a conf row
-    without the column (pre-layout indexes) reads as the directory
-    layout."""
-    import pathlib
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 10)
-    flat, dirs = str(tmp_path / "flat"), str(tmp_path / "dirs")
-    similarity.save_lsh_index(emb, flat, n_tables=4, n_planes=4)
-    similarity.save_lsh_index(
-        emb, dirs, n_tables=4, n_planes=4, bucket_dirs=True
-    )
-    as_rows = lambda p: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim)
-        for r in similarity.query_lsh_index(queries, p, k=5).collect()
-    )
-    got = as_rows(flat)
-    assert got == as_rows(dirs)
-    assert got, "serving returned no rows"
-
-    # layout on disk: one partition dir per TABLE, no bucket= dirs
-    subdirs = [d.name for d in pathlib.Path(f"{flat}/buckets").iterdir()
-               if d.is_dir()]
-    assert sorted(subdirs) == [f"table_idx={t}" for t in range(4)]
-    dir_subdirs = [d.name for d in pathlib.Path(f"{dirs}/buckets").iterdir()
-                   if d.is_dir()]
-    assert all(d.startswith("table_idx=") for d in dir_subdirs)
-    assert any(
-        p.name.startswith("bucket=")
-        for p in pathlib.Path(f"{dirs}/buckets/{dir_subdirs[0]}").iterdir()
-    )
-
-    # append + compact keep the flat layout and stay correct
-    extra = emb.where(F.col("vec_id") >= 450)
-    base = str(tmp_path / "base")
-    similarity.save_lsh_index(
-        emb.where(F.col("vec_id") < 450), base, n_tables=4, n_planes=4
-    )
-    similarity.append_to_lsh_index(extra, base)
-    similarity.delete_from_index(spark, base, [0])
-    similarity.compact_lsh_index(spark, base)
-    subdirs = [d.name for d in pathlib.Path(f"{base}/buckets").iterdir()
-               if d.is_dir()]
-    assert sorted(subdirs) == [f"table_idx={t}" for t in range(4)]
-    served = similarity.query_lsh_index(queries, base, k=5).collect()
-    assert served and 0 not in {r.neighbor_id for r in served}
-
-    # pre-layout conf (no bucket_dirs column) reads as the dir layout
-    legacy_conf = spark.read.parquet(f"{dirs}/conf").drop("bucket_dirs")
-    r = legacy_conf.collect()[0]
-    assert similarity._lsh_bucket_dirs(r) is True
-
-
-def test_ivf_flat_lists_layout_serves_identically(spark, tmp_path):
-    """The opt-in flat lists layout (no list_id dirs, sorted file) —
-    the IVF twin of the LSH flat-bucket dial for indexes whose list
-    count outgrows directory listing — serves bit-for-bit what the
-    directory layout serves, and append/delete/compact/rebuild detect
-    and keep it."""
-    import pathlib
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 10)
-    dirs, flat = str(tmp_path / "d"), str(tmp_path / "f")
-    similarity.save_ivf_index(
-        emb.where(F.col("vec_id") < 450), dirs, n_centroids=8
-    )
-    similarity.save_ivf_index(
-        emb.where(F.col("vec_id") < 450), flat, n_centroids=8,
-        list_dirs=False,
-    )
-    assert similarity._ivf_list_dirs(dirs) and not similarity._ivf_list_dirs(flat)
-    as_rows = lambda p: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim)
-        for r in similarity.query_ivf_index(queries, p, k=5, n_probe=4).collect()
-    )
-    got = as_rows(flat)
-    assert got == as_rows(dirs) and got
-
-    # the maintenance cycle keeps the flat shape and the dirs results
-    for p in (dirs, flat):
-        similarity.append_to_ivf_index(emb.where(F.col("vec_id") >= 450), p)
-        similarity.delete_from_index(spark, p, [3])
-        similarity.compact_ivf_index(spark, p)
-    assert not any(
-        d.name.startswith("list_id=")
-        for d in pathlib.Path(f"{flat}/lists").iterdir() if d.is_dir()
-    )
-    got = as_rows(flat)
-    assert got == as_rows(dirs) and got
-    assert 3 not in {t[2] for t in got}
-
-    similarity.rebuild_ivf_index(spark, flat, n_centroids=8)
-    assert not similarity._ivf_list_dirs(flat)
-    assert as_rows(flat), "flat rebuild stopped serving"
 
 
 def test_recipe_reliable_mode_retires_components_step(spark, tmp_path):
@@ -3682,7 +3107,7 @@ def test_recall_target_wires_advisor_pick_into_maintenance(spark, tmp_path):
     recs = [r for r in st["recommendations"]
             if r.startswith("recall-rebuild:")]
     assert len(recs) == 1
-    assert f"rebuild_lsh_index(n_tables={pick['n_tables']})" in recs[0]
+    assert f"rebuild_index(n_tables={pick['n_tables']})" in recs[0]
     assert f"n_multiprobe={pick['flips']}" in recs[0]
     assert f"store ×{pick['store_multiplier']}" in recs[0]
     assert f"reads ×{pick['probe_volume_multiplier']}" in recs[0]
@@ -3701,7 +3126,7 @@ def test_recall_target_wires_advisor_pick_into_maintenance(spark, tmp_path):
     assert all(a.startswith("compact") for a in mt["actions"])
 
     # applying the named rebuild matches the predicted multipliers
-    similarity.rebuild_lsh_index(spark, path, n_tables=pick["n_tables"])
+    similarity.rebuild_index(spark, path, n_tables=pick["n_tables"])
     st2 = similarity.index_stats(spark, path, recall_target=0.5)
     assert st2["multiprobe"]["current"]["n_tables"] == pick["n_tables"]
     ratio = st2["rows_live"] / rows_before

@@ -123,12 +123,12 @@ def test_spark_written_metadata_still_serves(spark, emb, tmp_path, family):
         "lsh": (
             lambda q, p: similarity.query_lsh_index(q, p, k=5),
             similarity.append_to_lsh_index,
-            similarity.compact_lsh_index,
+            similarity.compact_index,
         ),
         "ivfpq": (
             lambda q, p: pq.query_ivfpq_index(q, p, k=5, n_probe=2),
             pq.append_to_ivfpq_index,
-            pq.compact_ivfpq_index,
+            similarity.compact_index,
         ),
     }[family]
     base, extra = emb.where("vec_id < 400"), emb.where("vec_id >= 400")
@@ -186,6 +186,36 @@ def test_list_delete_runs_no_spark_job_and_leaves_no_temp_file(
     assert _jobs_in(
         spark, lambda: similarity.delete_from_index(spark, path, ids)
     ) > 0
+
+
+def test_list_delete_takes_numpy_ids_as_bigint(spark, emb, tmp_path):
+    """numpy integers are integer ids: stored as bigint, applied by the
+    serve path, and still written without a Spark job."""
+    import numpy as np
+    import pyarrow as pa
+
+    path = str(tmp_path / "lsh")
+    _save("lsh", emb, path)
+    ids = np.array([3, 5])
+    assert _jobs_in(
+        spark, lambda: similarity.delete_from_index(spark, path, list(ids))
+    ) == 0
+    assert _jobs_in(
+        spark,
+        lambda: similarity.delete_from_index(
+            spark, path, np.array([7], dtype=np.int32)
+        ),
+    ) == 0
+    assert read_metadata(f"{path}/tombstones").schema.field("id").type == (
+        pa.int64()
+    )
+    assert sorted(
+        r.id for r in similarity._tombstone_df(spark, path).collect()
+    ) == [3, 5, 7]
+    served = similarity.query_lsh_index(
+        emb.where("vec_id < 12"), path, k=5
+    ).collect()
+    assert served and not {3, 5, 7} & {r.neighbor_id for r in served}
 
 
 def test_write_metadata_failure_leaves_no_partial_file(tmp_path, monkeypatch):

@@ -964,27 +964,39 @@ def test_windowed_agg_drops_events_beyond_watermark(spark, tmp_path_factory):
     assert ("2024-03-03", "A", 1) in rows2
 
 
-def test_stream_index_vectors_appends_novel_and_serves(spark, tmp_path_factory):
-    """Continuous ANN indexing: an offline-built IVF index absorbs
-    streamed embedding batches — novel ids filed under the fixed
-    centroids, already-indexed ids dropped (in the offline build, in
-    earlier batches, and across restarts), and the planted vector is
-    immediately servable; cadence compaction folds the append debt."""
+@pytest.mark.parametrize("family", ["ivf", "lsh", "ivfpq"])
+def test_stream_index_vectors_appends_novel_and_serves(
+    spark, tmp_path_factory, family
+):
+    """Continuous ANN indexing into an offline-built index of any
+    family (detected from the directory): novel ids filed under the
+    fixed metadata in the stored encoding, already-indexed ids dropped
+    (in the offline build, in earlier batches, and across restarts),
+    and the planted vector immediately servable; cadence compaction
+    folds the append debt."""
     import json
+    import math
 
-    from pyspark.sql import functions as F
+    from hadoop_2_10_0_src_mapreduce_spark.operators import pq, similarity
+    from hadoop_2_10_0_src_mapreduce_spark.operators.index_store import (
+        index_codec,
+    )
 
-    from hadoop_2_10_0_src_mapreduce_spark.operators import similarity
-
-    base = tmp_path_factory.mktemp("stream_ivf")
+    base = tmp_path_factory.mktemp(f"stream_{family}")
     src = base / "vecs"
     src.mkdir()
     idx, ckpt = str(base / "index"), str(base / "ckpt")
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    similarity.save_ivf_index(
-        emb.where(F.col("vec_id") < 300), idx, n_centroids=8
-    )
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    offline = emb.where(F.col("vec_id") < 300)
+    if family == "ivf":
+        similarity.save_ivf_index(offline, idx, n_centroids=8)
+    elif family == "lsh":
+        similarity.save_lsh_index(offline, idx, n_planes=4, n_tables=4)
+    else:
+        pq.save_ivfpq_index(offline, idx, n_centroids=8, n_codes=64)
+    rows = f"{idx}/{index_codec(idx).rows}"
+    dtypes = sorted(spark.read.parquet(rows).dtypes)
     dim = len(emb.take(1)[0].embedding)
     schema = "vec_id long, embedding array<double>"
 
@@ -992,8 +1004,6 @@ def test_stream_index_vectors_appends_novel_and_serves(spark, tmp_path_factory):
         # directionally distinct per id (constant vectors would all be
         # cosine-parallel and unservable-by-identity): unit vectors at
         # angle i/10 rad, ≥0.1 rad apart for the ids used here
-        import math
-
         a = i / 10.0
         return [math.cos(a), math.sin(a)] + [0.0] * (dim - 2)
 
@@ -1001,21 +1011,25 @@ def test_stream_index_vectors_appends_novel_and_serves(spark, tmp_path_factory):
         rows = [{"vec_id": i, "embedding": vec(i)} for i in ids]
         (src / name).write_text("\n".join(json.dumps(r) for r in rows))
 
-    # wave 1: 300 is already indexed? no — offline holds <300, so 300
-    # and 301 are novel, 5 is a dup of the offline build
+    def copies():
+        # rows per id: one for IVF and IVF-PQ, one per table for LSH
+        df = spark.read.parquet(rows)
+        assert sorted(df.dtypes) == dtypes  # the stored encoding
+        return {
+            r.vec_id: r.c
+            for r in df.groupBy("vec_id").agg(F.count("*").alias("c")).collect()
+        }
+
+    # wave 1: the offline build holds ids < 300, so 300 and 301 are
+    # novel and 5 is a dup of the offline build
     write_wave("w1.json", [300, 301, 5])
     q = sw.stream_index_vectors(
         spark, str(src), schema, idx, checkpoint_dir=ckpt, compact_every=1
     )
     q.awaitTermination(120)
-    stored = spark.read.parquet(f"{idx}/lists")
-    counts = {
-        r.vec_id: r.c
-        for r in stored.groupBy("vec_id").agg(F.count("*").alias("c")).collect()
-    }
-    assert counts.get(300) == 1 and counts.get(301) == 1
-    assert counts.get(5) == 1  # the OFFLINE copy, not a second one
-    assert len(counts) == 302
+    per = copies()
+    assert per[300] == per[301] == per[5] == per[0]  # no second copy of 5
+    assert len(per) == 302
 
     # restart with a wave that repeats 300 and adds 302
     write_wave("w2.json", [300, 302])
@@ -1023,87 +1037,31 @@ def test_stream_index_vectors_appends_novel_and_serves(spark, tmp_path_factory):
         spark, str(src), schema, idx, checkpoint_dir=ckpt
     )
     q2.awaitTermination(120)
-    stored = spark.read.parquet(f"{idx}/lists")
-    assert stored.count() == 303
-    assert stored.where(F.col("vec_id") == 300).count() == 1
+    per = copies()
+    assert len(per) == 303 and per[300] == per[302] == per[0]
 
-    # the streamed vector serves: exact self-match at distance ~0
-    probe = spark.createDataFrame(
-        [(900000, vec(302))], "vec_id long, embedding array<double>"
-    )
-    got = similarity.query_ivf_index(probe, idx, k=1, n_probe=8)
-    assert [r.neighbor_id for r in got.collect()] == [302]
-
-
-def test_stream_index_vectors_into_ivfpq(spark, tmp_path_factory):
-    """The same continuous-ingestion contract against an IVF-PQ
-    target, auto-detected from the directory layout: streamed novel
-    ids are ENCODED under the fixed centroids+codebooks and appended
-    as codes; dups (offline or earlier-batch) are dropped; the
-    streamed vector is immediately servable through the rescored
-    path."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from hadoop_2_10_0_src_mapreduce_spark.operators import pq
-
-    base = tmp_path_factory.mktemp("stream_ivfpq")
-    src = base / "vecs"
-    src.mkdir()
-    idx, ckpt = str(base / "index"), str(base / "ckpt")
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pq.save_ivfpq_index(
-        emb.where(F.col("vec_id") < 300), idx, n_centroids=8, n_codes=64
-    )
-    dim = len(emb.take(1)[0].embedding)
-    schema = "vec_id long, embedding array<double>"
-
-    def vec(i):
-        import math
-
-        a = i / 10.0
-        return [math.cos(a), math.sin(a)] + [0.0] * (dim - 2)
-
-    rows = [{"vec_id": i, "embedding": vec(i)} for i in (300, 301, 5)]
-    (src / "w1.json").write_text("\n".join(json.dumps(r) for r in rows))
-    q = sw.stream_index_vectors(
-        spark, str(src), schema, idx, checkpoint_dir=ckpt
-    )
-    q.awaitTermination(120)
-    stored = spark.read.parquet(f"{idx}/lists")
-    assert dict(stored.dtypes)["pq_codes"] == "array<smallint>"
-    counts = {
-        r.vec_id: r.c
-        for r in stored.groupBy("vec_id").agg(F.count("*").alias("c")).collect()
-    }
-    assert counts.get(300) == 1 and counts.get(301) == 1
-    assert counts.get(5) == 1  # the offline copy only
-    assert len(counts) == 302
-
-    # the streamed vector serves through the rescored path (raw ADC at
-    # 64 non-residual codes quantizes this planted 2-plane vector into
-    # a broad tie group, so the candidate set needs width; rescore is
-    # the documented serving grade): top-1 is the exact self-match at
-    # cosine 1.0
-    probe = spark.createDataFrame(
-        [(900000, vec(301))], "vec_id long, embedding array<double>"
-    )
-    truth = emb.where(F.col("vec_id") < 300).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).unionByName(
-        spark.createDataFrame(
-            [(i, vec(i)) for i in (300, 301)],
-            "vec_id long, embedding array<double>",
+    # the streamed vector serves: exact self-match. IVF-PQ serves
+    # through the rescored path (raw ADC at 64 non-residual codes puts
+    # this planted 2-plane vector in a broad tie group, so the
+    # candidate set needs width)
+    probe = spark.createDataFrame([(900000, vec(302))], schema)
+    if family == "ivf":
+        got = similarity.query_ivf_index(probe, idx, k=1, n_probe=8)
+    elif family == "lsh":
+        got = similarity.query_lsh_index(probe, idx, k=1)
+    else:
+        truth = offline.select(
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("embedding"),
+        ).unionByName(spark.createDataFrame(
+            [(i, vec(i)) for i in (300, 301, 302)], schema
+        ))
+        got = pq.query_ivfpq_index(
+            probe, idx, k=1, n_probe=8, rescore=truth, oversample=64
         )
-    )
-    got = pq.query_ivfpq_index(
-        probe, idx, k=1, n_probe=8, rescore=truth, oversample=64
-    )
-    rows = got.collect()
-    assert [r.neighbor_id for r in rows] == [301]
-    assert rows[0].sim == 1.0
+    got = got.collect()
+    assert [r.neighbor_id for r in got] == [302]
+    assert got[0].sim > 0.999999
 
 
 def test_jpeg_progressive_codec_matches_baseline_pixels():

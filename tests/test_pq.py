@@ -13,6 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_2_10_0_src_mapreduce_spark.operators import pq, similarity
+from hadoop_2_10_0_src_mapreduce_spark.operators.index_store import (
+    _read_conf,
+    _stored_dirs,
+)
 from tests.conftest import SF_SMALL
 
 
@@ -214,44 +218,6 @@ def test_ivfpq_partition_pruning_and_probe_recall(spark, emb, books, tmp_path):
     assert _recall(served.collect(), exact, 10) >= 0.25
 
 
-def test_ivfpq_append_equals_rebuild_and_tombstones_vanish(spark, emb, tmp_path):
-    original = emb.where(F.col("vec_id") < 400)
-    batch = emb.where(F.col("vec_id") >= 400)
-    grown = str(tmp_path / "grown")
-    pq.save_ivfpq_index(original, grown, n_centroids=8, n_subspaces=8, n_codes=64)
-    pq.append_to_ivfpq_index(batch, grown)
-
-    fresh = str(tmp_path / "fresh")
-    pq.save_ivfpq_index(
-        emb, fresh, n_centroids=8, n_subspaces=8, n_codes=64, train_df=original
-    )
-    read_codes = lambda p: sorted(
-        (r.vec_id, int(r.list_id), tuple(r.pq_codes))
-        for r in spark.read.parquet(f"{p}/lists").collect()
-    )
-    assert read_codes(grown) == read_codes(fresh)
-
-    queries = emb.where(F.col("vec_id") < 5)
-    before = pq.query_ivfpq_index(queries, grown, k=5, n_probe=8)
-    victim = before.first()["neighbor_id"]
-    similarity.delete_from_index(spark, grown, [int(victim)])
-    after = pq.query_ivfpq_index(queries, grown, k=5, n_probe=8)
-    assert victim not in {r.neighbor_id for r in after.collect()}
-
-    pq.compact_ivfpq_index(spark, grown)
-    import pathlib
-
-    assert not (pathlib.Path(grown) / "tombstones").exists()
-    compacted = pq.query_ivfpq_index(queries, grown, k=5, n_probe=8)
-    as_rows = lambda df: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim) for r in df.collect()
-    )
-    assert as_rows(compacted) == as_rows(after)
-    assert victim not in {
-        r.vec_id for r in spark.read.parquet(f"{grown}/lists").collect()
-    }
-
-
 def test_packed_codes_equal_unpacked(spark, emb, books, tmp_path):
     """packed=True stores one m-byte binary per vector; every kernel
     must read it identically to the array<smallint> layout, and the
@@ -332,7 +298,7 @@ def test_residual_reconstruction_beats_plain_on_clusters(spark, clustered, tmp_p
         # decode through the API: residual stores pass centers= (the
         # conf records which — pq_decode without them would return
         # near-zero residuals, the documented audit footgun)
-        assert pq._ivfpq_conf(path)["residual"] is residual
+        assert _read_conf(f"{path}/conf")["residual"] is residual
         rec_rows = pq.pq_decode(
             spark.read.parquet(f"{path}/lists"), books,
             centers=cents if residual else None,
@@ -382,37 +348,28 @@ def test_residual_served_matches_brute_force_when_codes_saturate(
         assert abs(ssim - sim) <= 2e-6, (key, ssim, sim)
 
 
-def test_residual_append_equals_fresh_and_conf_backcompat(spark, clustered, tmp_path):
-    original = clustered.where(F.col("vec_id") < 200)
-    batch = clustered.where(F.col("vec_id") >= 200)
-    grown = str(tmp_path / "rg")
-    pq.save_ivfpq_index(
-        original, grown, n_centroids=5, n_subspaces=8, n_codes=16,
-        residual=True,
-    )
-    pq.append_to_ivfpq_index(batch, grown)
-    fresh = str(tmp_path / "rf")
-    pq.save_ivfpq_index(
-        clustered, fresh, n_centroids=5, n_subspaces=8, n_codes=16,
-        residual=True, train_df=original,
-    )
-    read_codes = lambda p: sorted(
-        (r.vec_id, int(r.list_id), tuple(r.pq_codes))
-        for r in spark.read.parquet(f"{p}/lists").collect()
-    )
-    assert read_codes(grown) == read_codes(fresh)
-
-    # a pre-conf index (dir removed) reads as the non-residual layout
-    # and still serves
+def test_ivfpq_index_written_before_conf_serves_as_plain(
+    spark, clustered, tmp_path
+):
+    """An IVF-PQ index written before it had a conf dir reads as the
+    non-residual layout: it serves exactly what it served with the
+    conf, and appends still encode."""
     import shutil
 
     legacy = str(tmp_path / "legacy")
-    pq.save_ivfpq_index(clustered, legacy, n_centroids=5, n_subspaces=8,
-                        n_codes=16)
-    shutil.rmtree(f"{legacy}/conf")
-    assert pq._ivfpq_conf(legacy) == {"residual": False}
+    pq.save_ivfpq_index(clustered.where(F.col("vec_id") < 250), legacy,
+                        n_centroids=5, n_subspaces=8, n_codes=16)
     queries = clustered.where(F.col("vec_id") < 5)
-    assert pq.query_ivfpq_index(queries, legacy, k=3, n_probe=5).count() > 0
+    as_rows = lambda: sorted(  # noqa: E731
+        tuple(r) for r in
+        pq.query_ivfpq_index(queries, legacy, k=3, n_probe=5).collect()
+    )
+    with_conf = as_rows()
+    shutil.rmtree(f"{legacy}/conf")
+    assert _read_conf(f"{legacy}/conf") == {}
+    assert with_conf and as_rows() == with_conf
+    similarity.append_to_index(clustered.where(F.col("vec_id") >= 250), legacy)
+    assert spark.read.parquet(f"{legacy}/lists").count() == 300
 
 
 def test_text_to_ivfpq_serving_composition(spark, tmp_path):
@@ -453,46 +410,6 @@ def test_text_to_ivfpq_serving_composition(spark, tmp_path):
     assert all(r.sim < 0.5 for r in got[1:])
 
 
-def test_rebuild_ivfpq_preserves_conf_and_compacts(spark, clustered, tmp_path):
-    """rebuild_ivfpq_index re-trains from the source embeddings while
-    carrying the stored conf (residual flag, code geometry), excludes
-    tombstoned ids, drops the tombstone dir, and equals a fresh
-    save over the live source with the same settings."""
-    path = str(tmp_path / "rb")
-    pq.save_ivfpq_index(
-        clustered, path, n_centroids=5, n_subspaces=8, n_codes=16,
-        residual=True,
-    )
-    similarity.delete_from_index(spark, path, [0, 1, 2])
-    pq.rebuild_ivfpq_index(spark, path, clustered, n_centroids=5)
-
-    conf = pq._ivfpq_conf(path)
-    assert conf["residual"] is True and conf["n_codes"] == 16
-
-    import pathlib
-
-    assert not (pathlib.Path(path) / "tombstones").exists()
-
-    fresh = str(tmp_path / "rb_fresh")
-    pq.save_ivfpq_index(
-        clustered.where(~F.col("vec_id").isin([0, 1, 2])), fresh,
-        n_centroids=5, n_subspaces=8, n_codes=16, residual=True,
-    )
-    read_codes = lambda p: sorted(
-        (r.vec_id, int(r.list_id), tuple(r.pq_codes))
-        for r in spark.read.parquet(f"{p}/lists").collect()
-    )
-    assert read_codes(path) == read_codes(fresh)
-
-    queries = clustered.where(F.col("vec_id").isin([5, 6]))
-    as_rows = lambda p: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim)
-        for r in pq.query_ivfpq_index(queries, p, k=3, n_probe=5).collect()
-    )
-    assert as_rows(path) == as_rows(fresh)
-    assert not {0, 1, 2} & {t[2] for t in as_rows(path)}
-
-
 def test_adaptive_cell_cap_follows_max_train(spark):
     """The cell-count cap is the trainer's sample bound: at the
     default it is CELL_CAP, and a raised max_train raises it with the
@@ -515,57 +432,6 @@ def test_adaptive_cell_cap_follows_max_train(spark):
         "SELECT " + adaptive_centroids_sql("e", cap=32768)
     ).fetchone()[0]
     assert got == adaptive_centroids(n, cap=32768)
-
-
-def test_ivfpq_flat_lists_layout(spark, emb, tmp_path):
-    """The flat lists dial on the PQ store: identical serving, layout
-    detected and kept by append and rebuild."""
-    import pathlib
-
-    dirs, flat = str(tmp_path / "pd"), str(tmp_path / "pf")
-    base = emb.where(F.col("vec_id") < 400)
-    pq.save_ivfpq_index(base, dirs, n_centroids=8, n_codes=64)
-    pq.save_ivfpq_index(base, flat, n_centroids=8, n_codes=64,
-                        list_dirs=False)
-    assert not similarity._ivf_list_dirs(flat)
-    queries = emb.where(F.col("vec_id") < 10)
-    as_rows = lambda p: sorted(
-        (r.query_id, r.rnk, r.neighbor_id, r.sim)
-        for r in pq.query_ivfpq_index(queries, p, k=5, n_probe=8).collect()
-    )
-    got = as_rows(flat)
-    assert got == as_rows(dirs) and got
-
-    pq.append_to_ivfpq_index(emb.where(F.col("vec_id") >= 400), flat)
-    assert not similarity._ivf_list_dirs(flat)
-    pq.rebuild_ivfpq_index(spark, flat, emb, n_centroids=8)
-    assert not similarity._ivf_list_dirs(flat)
-    assert not any(
-        d.name.startswith("list_id=")
-        for d in pathlib.Path(f"{flat}/lists").iterdir() if d.is_dir()
-    )
-    assert as_rows(flat), "flat rebuild stopped serving"
-
-
-def test_rebuild_heals_crash_inside_swap_window(spark, clustered, tmp_path):
-    """A crash between 'move lists aside' and 'move fresh lists in'
-    leaves no <path>/lists at all; re-running the rebuild must heal
-    (layout detection falls back to the .__old__ copy) rather than
-    die on detection."""
-    import pathlib
-    import shutil
-
-    path = str(tmp_path / "crash")
-    pq.save_ivfpq_index(clustered, path, n_centroids=5, n_codes=16,
-                        residual=True)
-    # simulate the crash window
-    shutil.move(f"{path}/lists", f"{path}/lists.__old__")
-    assert not pathlib.Path(f"{path}/lists").exists()
-    pq.rebuild_ivfpq_index(spark, path, clustered, n_centroids=5)
-    assert pathlib.Path(f"{path}/lists").exists()
-    assert pq._ivfpq_conf(path)["residual"] is True
-    queries = clustered.where(F.col("vec_id") < 5)
-    assert pq.query_ivfpq_index(queries, path, k=3, n_probe=5).count() > 0
 
 
 def test_ivfpq_gate_branch_nonvacuous(spark, emb):
@@ -899,7 +765,7 @@ def test_auto_layout_resolves_from_list_count(spark, emb, tmp_path):
     similarity.save_ivf_index(emb, small_auto, n_centroids=8)
     similarity.save_ivf_index(emb, small_dirs, n_centroids=8,
                               list_dirs=True)
-    assert similarity._ivf_list_dirs(small_auto)
+    assert _stored_dirs(f"{small_auto}/lists", ("list_id",))
     got = as_rows(similarity.query_ivf_index(queries, small_auto, k=5))
     assert got == as_rows(
         similarity.query_ivf_index(queries, small_dirs, k=5)
@@ -911,7 +777,7 @@ def test_auto_layout_resolves_from_list_count(spark, emb, tmp_path):
     pq.save_ivfpq_index(emb, big_auto, n_centroids=300, n_codes=16)
     pq.save_ivfpq_index(emb, big_flat, n_centroids=300, n_codes=16,
                         list_dirs=False)
-    assert not similarity._ivf_list_dirs(big_auto)
+    assert not _stored_dirs(f"{big_auto}/lists", ("list_id",))
     got = as_rows(pq.query_ivfpq_index(queries, big_auto, k=5))
     assert got == as_rows(
         pq.query_ivfpq_index(queries, big_flat, k=5)
@@ -956,7 +822,7 @@ def test_pointer_swaps_blink_free_and_deferred_deletion(spark, tmp_path):
 def test_concurrent_serving_during_compaction_no_enoent(spark, emb, tmp_path):
     """The maintain-while-serving composition the CLI encourages:
     with pointer swaps enabled on the lists dir, a reader looping
-    query_ivf_index during compact_ivf_index never sees ENOENT or an
+    query_ivf_index during compact_index never sees ENOENT or an
     empty result — the r6-documented blink is closed."""
     import threading
 
@@ -975,7 +841,7 @@ def test_concurrent_serving_during_compaction_no_enoent(spark, emb, tmp_path):
 
     def compact_loop():
         try:
-            similarity.compact_ivf_index(spark, path)
+            similarity.compact_index(spark, path)
         except BaseException as e:  # surfaced to the main thread
             errors.append(e)
         finally:
@@ -1062,27 +928,6 @@ def test_minima_report_extracts_all_bench_shapes(tmp_path):
     assert qs == {"q_whole": 1.5}
     assert sf == 0.1
     assert _extract({"tail": "no pairs here"}) == (None, None)
-
-
-def test_rebuild_keeps_pointer_mode_serving(spark, emb, tmp_path):
-    """An IVF index whose lists were converted to pointer mode keeps
-    its blink-free layout through rebuild_ivf_index: the lists swap
-    goes through atomic_swap_write's generation path, the symlink
-    stays, and serving continues."""
-    import os
-
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        enable_pointer_swaps,
-    )
-
-    path = str(tmp_path / "rbp")
-    base = emb.where(F.col("vec_id") < 300)
-    similarity.save_ivf_index(base, path, n_centroids=8)
-    enable_pointer_swaps(f"{path}/lists")
-    similarity.rebuild_ivf_index(spark, path, corpus=base, n_centroids=8)
-    assert os.path.islink(f"{path}/lists")
-    queries = emb.where(F.col("vec_id") < 5)
-    assert similarity.query_ivf_index(queries, path, k=3).count() > 0
 
 
 def test_rollback_pointer_swap_flip_flop(spark, tmp_path):
@@ -1345,7 +1190,7 @@ def test_query_planned_before_compaction_collects_after(spark, emb, tmp_path):
     queries = emb.where(F.col("vec_id") < 5)
 
     planned = similarity.query_ivf_index(queries, path, k=3, n_probe=8)
-    similarity.compact_ivf_index(spark, path)  # swaps the link mid-flight
+    similarity.compact_index(spark, path)  # swaps the link mid-flight
     got = {(r.query_id, r.neighbor_id) for r in planned.collect()}
 
     assert os.path.islink(f"{path}/lists")  # still pointer-mode
@@ -1411,33 +1256,53 @@ def test_pin_generations_never_returns_mixed_set(spark, tmp_path):
     assert pins["plain"] == f"{root}/plain"
 
 
-def test_lsh_serving_pins_conf_and_buckets_as_a_set(spark, emb, tmp_path):
-    """query_lsh_index reads conf AND buckets in one query; both
-    pointer-mode, planned before a rebuild's swaps, collected after —
-    the serving-side pin for the mixed-generation fix (geometry from
-    one generation applied to buckets of another skews every probe)."""
+@pytest.mark.parametrize("family", ["ivf", "lsh", "ivfpq"])
+def test_serving_pins_all_subdirs_as_a_set(
+    spark, emb, tmp_path, monkeypatch, family
+):
+    """Every family's serve pins ALL of its subdirs in one
+    ``pin_generations`` call — metadata of one generation applied to
+    rows of another serves wrong neighbors — and a query planned with
+    every subdir in pointer mode collects after a compaction swapped
+    the row store, with the same answers."""
     import os
 
+    from hadoop_2_10_0_src_mapreduce_spark.operators import index_store
     from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
         enable_pointer_swaps,
     )
 
-    path = str(tmp_path / "lshix")
+    path = str(tmp_path / family)
     base = emb.where(F.col("vec_id") < 300)
-    similarity.save_lsh_index(base, path, n_planes=8, n_tables=4)
-    enable_pointer_swaps(f"{path}/conf")
-    enable_pointer_swaps(f"{path}/buckets")
+    if family == "ivf":
+        similarity.save_ivf_index(base, path, n_centroids=8)
+        serve = lambda q: similarity.query_ivf_index(  # noqa: E731
+            q, path, k=3, n_probe=8)
+    elif family == "lsh":
+        similarity.save_lsh_index(base, path, n_planes=8, n_tables=4)
+        serve = lambda q: similarity.query_lsh_index(q, path, k=3)  # noqa: E731
+    else:
+        pq.save_ivfpq_index(base, path, n_centroids=8, n_codes=16)
+        serve = lambda q: pq.query_ivfpq_index(  # noqa: E731
+            q, path, k=3, n_probe=8)
+    codec = index_store.index_codec(path)
+    for sub in codec.subdirs:
+        enable_pointer_swaps(f"{path}/{sub}")
     queries = emb.where(F.col("vec_id") < 5)
 
-    planned = similarity.query_lsh_index(queries, path, k=3)
-    similarity.compact_lsh_index(spark, path)  # swaps buckets mid-flight
+    calls = []
+    pin_set = index_store.pin_generations
+    monkeypatch.setattr(
+        index_store, "pin_generations",
+        lambda p, names: calls.append(set(names)) or pin_set(p, names),
+    )
+    planned = serve(queries)
+    assert calls == [set(codec.subdirs)]
+    similarity.compact_index(spark, path)  # swaps the row store mid-flight
     got = {(r.query_id, r.neighbor_id) for r in planned.collect()}
 
-    assert os.path.islink(f"{path}/buckets")  # still pointer-mode
-    fresh = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.query_lsh_index(queries, path, k=3).collect()
-    }
-    # compaction without tombstones re-applies the same global cap:
-    # identical answers
+    assert os.path.islink(f"{path}/{codec.rows}")  # still pointer-mode
+    fresh = {(r.query_id, r.neighbor_id) for r in serve(queries).collect()}
+    # compaction without tombstones rewrites the same rows (LSH
+    # re-applies the same global cap): identical answers
     assert got == fresh and got

@@ -132,6 +132,28 @@ def test_cli_index_build_and_query(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "query_id" in out and "neighbor_id" in out
 
+    # every action but build detects the family: the LSH lifecycle
+    # runs without --family
+    import json
+
+    lsh = str(tmp_path / "cli_lsh")
+    ix = lambda *a: main(["index", *a, "--path", lsh])  # noqa: E731
+    assert ix("build", "--family", "lsh") == 0
+    assert ix("append", "--where", "vec_id >= 490") == 0
+    assert ix("delete", "--ids", "1,2") == 0
+    assert ix("compact") == 0
+    assert ix("stats") == 0
+    assert ix("rebuild", "--n-tables", "8") == 0
+    assert ix("query", "--n-queries", "3", "--limit", "5") == 0
+    out = capsys.readouterr().out
+    for verb in ("appended to", "compacted", "rebuilt"):
+        assert f"{verb} lsh index" in out
+    stats = json.loads(next(
+        line for line in out.splitlines() if line.startswith("{")
+    ))
+    assert stats["family"] == "lsh" and stats["n_tombstones"] == 0
+    assert "query_id" in out and "neighbor_id" in out
+
 
 def test_cogroup_reduce_sees_both_sides_ordered_and_missing_keys(spark):
     """DATAJOIN multi-input-reduce: fn gets (key, left, right) with a
